@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Benchmark harness: times every headline registry query at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON line:
+(default: every core) and prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query is executed with the `noop` writer so the full plan (scan ->
@@ -20,9 +20,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from hbase_hadoop_flightsearch_spark.operators.ranks import (
-    release_rank_bases,
-)
 from hbase_hadoop_flightsearch_spark.plans.registry import load_all
 from hbase_hadoop_flightsearch_spark.session import get_spark
 
@@ -83,10 +80,6 @@ def time_query(spark, q, sf_dir: str, runs: int) -> float:
     finally:
         for k in pins:
             spark.conf.unset(k)
-        # Drop rank-primitive correctness pins now the action has run,
-        # so cached ranged bases don't accumulate across seats/runs
-        # (operators/ranks.py lifecycle, ADVICE r12).
-        release_rank_bases()
 
 
 def main() -> None:
@@ -165,9 +158,7 @@ def main() -> None:
                 # (VERDICT r15 #8: the c8 scaling artifact previously
                 # reported machine CPUs here); machine_cpus keeps the
                 # hardware count for load/steal adjudication.
-                "n_cpus": int(
-                    os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1)
-                ),
+                "n_cpus": spark.sparkContext.defaultParallelism,
                 "machine_cpus": os.cpu_count(),
                 "steal_pct_busy": steal_pct_busy,
                 "loaded_box_medians": sorted(PY_STAGE)

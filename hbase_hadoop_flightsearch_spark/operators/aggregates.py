@@ -711,7 +711,7 @@ FROM t GROUP BY q
     doc="Equi-depth histogram (E4): NTILE(8) over a deterministic total "
     "order (price, orderkey tie-break) -> per-bucket bounds, computed "
     "through the distributed NTILE primitive (ranks.py — range "
-    "exchange + per-partition window + broadcast offsets, never a "
+    "split + per-partition window + broadcast offsets, never a "
     "single-task sort). Exact equi-depth at any scale; the approximate "
     "path is agg_percentiles_order_value's approx_percentile.",
 )
@@ -1281,7 +1281,7 @@ ORDER BY r_score, f_score, m_score
     "Spark shape: one shuffle to per-customer stats, the 1-row max "
     "date broadcast, three DISTRIBUTED quintile assignments over "
     "O(customers) rows (operators/ranks.py NTILE — three range "
-    "exchanges, never a single-task sort), O(125) output.",
+    "splits, never a single-task sort), O(125) output.",
 )
 def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -1301,7 +1301,7 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # three independent quintile assignments over O(customers), each on
-    # the distributed NTILE (operators/ranks.py) — three range exchanges
+    # the distributed NTILE (operators/ranks.py) — three range splits
     # instead of three single-task sorts.
     from .ranks import with_global_ntile
 
@@ -1438,7 +1438,7 @@ FROM ranked
     "Complements events_pareto_concentration (one number vs the "
     "curve). One shuffle to per-customer cents, then the distributed "
     "rank + totals primitive (operators/ranks.py) over O(customers) "
-    "rows — a range exchange, never a single-task sort — and O(1) "
+    "rows — a range split, never a single-task sort — and O(1) "
     "output.",
 )
 def agg_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1611,7 +1611,7 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Both ECDFs in one distributed pass (operators/ranks.py): collapse
     # to per-distinct-value counts, then running sums of each sample's
-    # counts + both grand totals through one range exchange — the
+    # counts + both grand totals through one range split — the
     # inclusive cumsum at each distinct v equals the old per-row
     # window's max-per-v, with no single-task sort of O(rows).
     g = merged.groupBy("v").agg(
@@ -1685,7 +1685,7 @@ FROM ranked
     "the grouped form — per distinct value, doubled midrank "
     "r2 = 2*cum_count - ties + 1 off the distributed prefix sum "
     "(operators/ranks.py) — so the plan is one grouped agg + one "
-    "range exchange + one aggregate, never a single-task sort.",
+    "range split + one aggregate, never a single-task sort.",
 )
 def agg_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .ranks import with_global_order_stats
@@ -2243,7 +2243,7 @@ FROM mapped m JOIN a ON a.rn = m.a_idx
     "src0's (the batch-effect-removal op: after mapping, src1's "
     "distribution EQUALS src0's, a property the test asserts): ranks "
     "via the distributed row-number primitive (operators/ranks.py — "
-    "two range exchanges, never a single-task sort of either slice), "
+    "two range splits, never a single-task sort of either slice), "
     "quantile index as a pure integer floor((rn-1)*n_a/n_b)+1, one "
     "plain equi join on the index (not broadcast: the reference side "
     "is corpus-sized too). The cross-source score harmonizer for "

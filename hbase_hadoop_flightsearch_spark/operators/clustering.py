@@ -1087,7 +1087,7 @@ def ml_decision_stump_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("y").cast("bigint").alias("pos"),
     )
     # sort-and-scan over distinct thresholds, distributed: running
-    # (count, positives) + grand totals through one range exchange
+    # (count, positives) + grand totals through one range split
     # (operators/ranks.py) — never a single-task cumulative window.
     pre = with_global_order_stats(
         grp,
@@ -1230,7 +1230,7 @@ FROM best2
 )
 def ml_decision_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.catalog import load_table
-    from .ranks import pin, with_global_order_stats
+    from .ranks import with_global_order_stats
 
     orders = load_table(spark, sf_dir, "orders")
     pts = orders.select(
@@ -1239,12 +1239,10 @@ def ml_decision_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("y"),
     )
-    # pin(): persisted for the root + both child sweeps, released by
-    # ranks.release_rank_bases() after the consuming action (ADVICE r12)
-    grp = pin(pts.groupBy("x_cents").agg(
+    grp = pts.groupBy("x_cents").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
         F.sum("y").cast("bigint").alias("pos"),
-    ))
+    )
 
     # DECIMAL(38,0) lift mirrors the oracle's HUGEINT (r12 5x finding:
     # the n^3-class products overflow BIGINT past ~1.6e6 rows)
@@ -1276,7 +1274,7 @@ def ml_decision_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.asc("cost"), F.asc("x_cents"))
         .limit(1)
     )
-    sided = pin(grp.crossJoin(
+    sided = grp.crossJoin(
         F.broadcast(root.select(F.col("x_cents").alias("t0")))
     ).select(
         "x_cents",
@@ -1285,7 +1283,7 @@ def ml_decision_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("x_cents") <= F.col("t0"), "L").otherwise("R").alias(
             "side"
         ),
-    ))
+    )
     # Each child node sweeps independently through the same distributed
     # primitive (two bounded fan-outs, not a 2-task side-partitioned
     # window over all thresholds); at depth d this generalizes to 2^d

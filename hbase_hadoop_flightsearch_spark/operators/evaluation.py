@@ -15,7 +15,7 @@ Scale posture (r12): NO unpartitioned window anywhere in this module.
 AUC collapses ties with a per-score groupBy and ranks the tie groups
 through the shared distributed cumsum primitive (ranks.py); the
 calibration/Brier NTILE cuts ride the distributed NTILE primitive —
-range exchange + per-partition window + broadcast offsets, never an
+range split + per-partition window + broadcast offsets, never an
 Exchange SinglePartition feeding fact-sized rows into one task
 (contract-asserted in tests/test_ranks.py). Every aggregate is
 partial-agg friendly. The evaluated "model" is a deterministic feature
@@ -70,7 +70,7 @@ FROM agg
     doc="Exact tie-aware ROC AUC via the rank-sum identity AUC = "
     "U/(n1*n0) (Mann-Whitney connection): scores collapsed to tie "
     "groups by a per-score groupBy, tie groups ranked by the "
-    "distributed cumulative count (ranks.py — range exchange + local "
+    "distributed cumulative count (ranks.py — range split + local "
     "window + broadcast offsets, no single-task sort), doubled integer "
     "midranks reconstructed per group, U in 2x units, AUC floored to "
     "ppm by integer division — no float on the compare path, so the "
@@ -226,7 +226,7 @@ FROM cum
     "as the exact AUC: one grouped agg collapses ties, then the "
     "distributed multi-measure prefix sum (operators/ranks.py) "
     "produces every cutoff's running k / running tp / total positives "
-    "through ONE range exchange — never a per-threshold loop and "
+    "through ONE range split — never a per-threshold loop and "
     "never a single-task sort. Completes the threshold-free AUC with "
     "the threshold-CHOOSING artifact every deployed classifier needs.",
 )

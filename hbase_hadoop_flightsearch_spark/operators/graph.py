@@ -66,6 +66,12 @@ def connected_components(
     """(doc_id, component_id) for `vertices` (col doc_id) under undirected
     `pairs` (cols d1, d2). component_id = min doc_id in the component.
 
+    Precondition: every pair endpoint must be a doc_id of `vertices`.
+    Endpoints are not semi-joined back to the vertex set (each round's
+    union-aggregate carries every propagated label), so an endpoint
+    outside it comes back as a label row of its own. Every caller here
+    derives its pairs from its vertex table.
+
     Convergence detection: sum(component_id) is strictly decreasing while
     any label changes (labels only ever drop to a smaller doc_id), so two
     equal consecutive sums == fixpoint. One extra round pays for the test;

@@ -950,7 +950,7 @@ ORDER BY rnk
     "a range' check every CDC/backfill pipeline runs): orderkeys are "
     "deliberately sparse, and the audit reports the top-10 largest "
     "contiguous missing ranges via a DISTRIBUTED LEAD over the sorted "
-    "key (operators/ranks.py — range exchange + rn+1 equi self-join, "
+    "key (operators/ranks.py — range split + rn+1 equi self-join, "
     "never a single-task sort of the key space). Exact integers "
     "throughout; the top-10 pick is a TakeOrdered limit and its rank "
     "column a window over exactly those 10 rows.",
@@ -1272,7 +1272,7 @@ def dq_drift_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Both ECDFs + both totals + the adjacent-value gap in one
     # distributed construction (operators/ranks.py): running sums and
-    # the row number come off one range exchange, and LEAD(cents) is
+    # the row number come off one range split, and LEAD(cents) is
     # the rn+1 equi self-join — no single-task sort of O(distinct
     # values) anywhere.
     from .ranks import with_global_order_stats

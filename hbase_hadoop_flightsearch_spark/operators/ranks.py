@@ -9,13 +9,19 @@ NTILE buckets with NO single-task stage anywhere.
 
 Construction (the classic two-pass distributed ranking):
 
-1. ``repartitionByRange(P, *order)`` — one range exchange gives globally
-   ordered partitions (partition i's keys all sort before partition
-   i+1's), with EXPLICIT P so AQE never re-coalesces the read and the
-   partition ids below are stable across the plan's two consumers.
-2. ``spark_partition_id()`` is materialized as a column IMMEDIATELY
-   above that exchange — both downstream branches consume the same
-   shuffle output one-to-one, so they see identical ids.
+1. Range bounds, once per call, at BUILD time: one driver-side action
+   takes a bounded row-uniform sample of the order keys
+   (``orderBy(rand(seed)).limit(20 * P)`` — about Spark's own
+   RangePartitioner sample size per output partition, P =
+   ``spark.sql.shuffle.partitions``), sorts it with the caller's order
+   and keeps P-1 evenly spaced keys as LITERALS.
+2. ``__gr_pid`` is a pure expression of each row's keys against those
+   literals (a binary search of nested CASE WHENs that honours every
+   order expression's direction and null ordering), so partition i's
+   keys all sort before partition i+1's. Being a function of the row
+   alone, every evaluation of the plan assigns the same pids whatever
+   ReuseExchange or a recomputation does — the two branches below can
+   never disagree, and no state outlives the query.
 3. Branch A: per-partition local rank / running sum via
    ``Window.partitionBy(pid).orderBy(*order)`` — a hash exchange on pid
    (P parallel tasks), never a single-task sort.
@@ -26,19 +32,17 @@ Construction (the classic two-pass distributed ranking):
    ever contains a Window fed by Exchange SinglePartition).
 5. ``global = local + broadcast offset[pid]``.
 
-Cost at scale: one range shuffle write of the input, materialized ONCE
-via an explicit ``persist(MEMORY_AND_DISK)`` pin on the ranged base —
-optimizer exchange reuse is NOT a correctness guarantee here (column
-pruning de-canonicalizes the two exchange subplans, each branch then
-re-samples range bounds independently; see the inline comment at the
-persist site and tests/test_ranks.py::test_ranged_base_pinned_once) —
-then two reads of that cached base, one pid-hash exchange, one P-row
-broadcast. The pin is released by ``release_rank_bases()`` (call it
-after the consuming action; bench/sweep harnesses do) or by
-``spark.catalog.clearCache()``. Skew caveat: the range partitioner
-co-locates equal keys, so a key holding a large fraction of all rows
-bounds parallelism — give row_number/ntile a high-cardinality tie-break
-column (every call site here does: doc_id / event_id / o_orderkey).
+Cost at scale: one sample action over the input when the DataFrame is
+BUILT (a per-partition top-20P heap, no shuffle of the input; a builder
+that calls this primitive is therefore not lazy, and declares it), then
+at execution two reads of the input (the window branch and the
+partial-agg branch), one pid-hash exchange, one P-row broadcast. No
+range exchange, no stored state. Bounds from a sample only decide how
+evenly rows spread over the P partitions, never which global rank a row
+gets. Skew caveat: equal keys share a pid, so a key holding a large
+fraction of all rows bounds parallelism — give row_number/ntile a
+high-cardinality tie-break column (every call site here does: doc_id /
+event_id / o_orderkey).
 
 The reference has no ranking operator anywhere (all three Main.java);
 this primitive backs the nine SURVEY §2b plans that previously rode an
@@ -52,6 +56,7 @@ from __future__ import annotations
 from collections.abc import Iterator, Sequence
 from typing import TYPE_CHECKING
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
@@ -72,43 +77,92 @@ _LOC = "__gr_loc"
 _RN = "__grout_rn"
 _CNT = "__gr_cnt"
 
-# Every persisted ranged base, strongest-ref'd here until released. The
-# persist is a correctness pin (see with_global_order_stats), so it can
-# only be dropped AFTER the consuming action has run — the operator
-# itself never knows when that is, hence this explicit lifecycle:
-# long-lived sessions (bench loops, registry sweeps) call
-# release_rank_bases() between queries so cached materializations don't
-# accumulate in the CacheManager (ADVICE r12).
-_LIVE_BASES: "list[DataFrame]" = []
+# Sampled order keys per output partition (Spark's RangePartitioner
+# default) and the fixed seed that makes the sample reproducible.
+_SAMPLE_PER_PART = 20
+_SAMPLE_SEED = 17
 
 
-def pin(df: DataFrame) -> DataFrame:
-    """Persist `df` (MEMORY_AND_DISK) and track it under the same
-    lifecycle as the ranged bases, for operators whose plans read an
-    intermediate twice (e.g. ml_decision_tree_depth2's per-threshold
-    histogram feeding both child sweeps). Released by
-    release_rank_bases()."""
-    from pyspark import StorageLevel
-
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_BASES.append(out)
+def _sort_keys(
+    order_exprs: Sequence[Column],
+) -> "list[tuple[Column, bool, bool]]":
+    """(key, descending, nulls_first) per order expression. A sort order
+    such as ``F.desc("x")`` is unwrapped to its child through the JVM
+    column node; any other column sorts ascending, nulls first."""
+    out = []
+    for c in order_exprs:
+        node = c._jc.node()
+        if node.getClass().getSimpleName() != "SortOrder":
+            out.append((c, False, True))
+            continue
+        key = Column(
+            SparkContext._jvm.org.apache.spark.sql.Column(node.child())
+        )
+        out.append((
+            key,
+            node.sortDirection().getClass().getSimpleName() == "Descending$",
+            node.nullOrdering().getClass().getSimpleName() == "NullsFirst$",
+        ))
     return out
 
 
-def release_rank_bases() -> int:
-    """Unpersist every ranged base pinned by with_global_order_stats
-    since the last release. Safe ONLY after the consuming action has
-    materialized its result (unpersisting earlier re-exposes the
-    bound-resampling race the pin exists to close). Returns the number
-    of bases released."""
-    n = len(_LIVE_BASES)
-    for b in _LIVE_BASES:
-        try:
-            b.unpersist()
-        except Exception:  # session already stopped — nothing to free
-            pass
-    _LIVE_BASES.clear()
-    return n
+def _before(key: Column, b: "Column | None", desc: bool,
+            nulls_first: bool) -> Column:
+    """`key` sorts strictly before the literal `b` (None = NULL) under
+    one order expression's direction and null ordering. Never NULL."""
+    if b is None:
+        return F.lit(False) if nulls_first else key.isNotNull()
+    lt = key > b if desc else key < b
+    return key.isNull() | lt if nulls_first else key.isNotNull() & lt
+
+
+def _at_or_before(keys, bound: "list[Column | None]") -> Column:
+    """The row's key tuple sorts at or before the literal tuple `bound`
+    (lexicographic over the order expressions)."""
+    cond = F.lit(True)
+    for (key, desc, nulls_first), b in reversed(list(zip(keys, bound))):
+        same = key.isNull() if b is None else key.eqNullSafe(b)
+        cond = _before(key, b, desc, nulls_first) | (same & cond)
+    return cond
+
+
+def _pid_expr(keys, bounds, lo: int, hi: int) -> Column:
+    """Partition id in [lo, hi]; bounds[j] is partition j's inclusive
+    upper key tuple. A binary search: about log2(P) tuple comparisons
+    per row, all against literals."""
+    if lo == hi:
+        return F.lit(lo)
+    mid = (lo + hi) // 2
+    return F.when(
+        _at_or_before(keys, bounds[mid]), _pid_expr(keys, bounds, lo, mid)
+    ).otherwise(_pid_expr(keys, bounds, mid + 1, hi))
+
+
+def _range_bounds(
+    df: DataFrame, order_exprs: Sequence[Column], keys, nparts: int
+) -> "list[list[Column | None]]":
+    """At most P-1 ascending literal key tuples splitting `df` into P
+    ranges of about equal size: evenly spaced keys of a row-uniform
+    sample of 20 keys per partition, sorted with the caller's order.
+    Runs the sample as ONE Spark action from the driver, now."""
+    sample = (
+        df.orderBy(F.rand(_SAMPLE_SEED))
+        .limit(_SAMPLE_PER_PART * nparts)
+        .orderBy(*order_exprs)
+        .select(*[k.alias(f"__gr_k{i}") for i, (k, _, _) in enumerate(keys)])
+    )
+    types = [f.dataType for f in sample.schema.fields]
+    rows = [tuple(r) for r in sample.collect()]
+    picked: "list[tuple]" = []
+    for j in range(1, nparts if rows else 0):
+        row = rows[j * len(rows) // nparts]
+        if not picked or row != picked[-1]:
+            picked.append(row)
+    return [
+        [None if v is None else F.lit(v).cast(t) for v, t in zip(row, types)]
+        for row in picked
+    ]
+
 
 def _make_prefix_offsets(outs: Sequence[str]):
     """Build the multi-measure exclusive-prefix-sum fold and its schema:
@@ -151,9 +205,10 @@ def with_global_order_stats(
     totals: "dict[str, Column] | None" = None,
     row_number: str | None = None,
 ) -> DataFrame:
-    """The multi-measure engine behind every helper here: ONE range
-    exchange + ONE pid-hash window + ONE O(P)-row broadcast, producing
-    any combination of
+    """The multi-measure engine behind every helper here: ONE sample
+    action at build time (literal range bounds, see the module
+    docstring) + ONE pid-hash window + ONE O(P)-row broadcast,
+    producing any combination of
 
       - ``cumsums[out] = value``: SUM(value) OVER (ORDER BY *order ROWS
         UNBOUNDED PRECEDING) as long column `out` (inclusive running
@@ -166,7 +221,10 @@ def with_global_order_stats(
     (an ECDF needs the running count AND the grand count; a PR sweep
     needs running k, running tp, and total positives) — computing them
     through one shared range partitioning costs the same as computing
-    one. All measure names must be distinct and absent from df."""
+    one. All measure names must be distinct and absent from df.
+
+    Not lazy: the range-bound sample runs as one Spark action when this
+    is called, so the input is computed once more at build time."""
     cumsums = dict(cumsums or {})
     totals = dict(totals or {})
     # Validate ALL measure names together up front: a name shared
@@ -203,30 +261,14 @@ def with_global_order_stats(
     except (TypeError, ValueError):
         nparts = 32
     order_exprs = list(order_exprs)
-    # The ranged base MUST be persisted: both branches below key on
-    # spark_partition_id() over this exchange, and repartitionByRange
-    # SAMPLES its bounds from the input's row order. Without a pin,
-    # Catalyst's column pruning narrows the offsets branch's projection,
-    # the two exchange subplans stop canonicalizing identically,
-    # ReuseExchange never fires, and each branch re-samples bounds
-    # independently — silently inconsistent pids whenever the upstream
-    # row order is nondeterministic (any hash-aggregate input; caught
-    # by agg_mann_whitney_u flipping values run to run in r12). The
-    # persist makes pid consistency unconditional on optimizer behavior:
-    # one materialization of the ranked input (MEMORY_AND_DISK, spills,
-    # LRU-evicted; an evicted partition recomputes from the already-
-    # written shuffle files, so its pid and contents are stable). On a
-    # real cluster, executor loss that forces a full shuffle recompute
-    # re-samples bounds — every consumer then sees the SAME new
-    # partitioning, so results stay consistent, merely re-ranged.
-    from pyspark import StorageLevel
-
-    base = (
-        df.repartitionByRange(nparts, *order_exprs)
-        .withColumn(_PID, F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # The pid is a pure function of the row's keys and the literal
+    # bounds, so both branches below (and any recomputation) agree on it
+    # whatever the upstream row order.
+    keys = _sort_keys(order_exprs)
+    bounds = _range_bounds(df, order_exprs, keys, nparts)
+    base = df.withColumn(
+        _PID, _pid_expr(keys, bounds, 0, len(bounds)).cast("int")
     )
-    _LIVE_BASES.append(base)
     w = Window.partitionBy(_PID).orderBy(*order_exprs)
     w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
 

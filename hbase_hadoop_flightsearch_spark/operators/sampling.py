@@ -308,7 +308,7 @@ ORDER BY label, event_id
     "independent, and auditable (no rand(), no stage-retry "
     "divergence). Spark shape: one scan, the positive count broadcast "
     "as one row, the negatives ranked by md5 through the distributed "
-    "row-number primitive (ranks.py, r12 — range exchange on the hash "
+    "row-number primitive (ranks.py — range split on the hash "
     "+ per-partition window + broadcast offsets, no single-task sort; "
     "the hash key is uniform so the range partitions are balanced by "
     "construction); output 2*k rows.",
@@ -1318,7 +1318,7 @@ FROM sel WHERE n_hits > 0
     "positions), so selection is value-exact in both engines. The HT "
     "estimate uses the integer stride as the per-hit weight. Plan: one "
     "distributed running sum over the key order (ranks.py — range "
-    "exchange + local window + broadcast offsets, which also carry the "
+    "split + local window + broadcast offsets, which also carry the "
     "grand total; no single-task window anywhere) + one aggregate.",
 )
 def sample_pps_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:

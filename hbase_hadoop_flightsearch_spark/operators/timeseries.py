@@ -1148,7 +1148,7 @@ ORDER BY s.share_pct
     "cum*100 >= share*total (no float percentages), ranking ties "
     "broken by user_id. Spark shape: one shuffle to per-user counts, "
     "then the distributed rank/cumsum primitive (operators/ranks.py) "
-    "over O(users) rows — a range exchange, never a single-task sort "
+    "over O(users) rows — a range split, never a single-task sort "
     "(per-user counts still scale with the corpus).",
 )
 def events_pareto_concentration(
@@ -1160,7 +1160,7 @@ def events_pareto_concentration(
     )
     # running event share, user rank, and both grand totals over
     # O(users) in one distributed pass (operators/ranks.py) — the
-    # "honest exact cost" is now a range exchange, not one task.
+    # "honest exact cost" is now a range split, not one task.
     from .ranks import with_global_order_stats
 
     ranked = with_global_order_stats(

@@ -860,7 +860,7 @@ GROUP BY t.seq_id, tot.total_tokens
     "across its boundary (the attention-contamination metric that "
     "motivates doc-boundary masking), plus its fill (only the tail "
     "sequence is partial). All integer arithmetic off ONE distributed "
-    "prefix sum (operators/ranks.py — range exchange + broadcast "
+    "prefix sum (operators/ranks.py — range split + broadcast "
     "offsets, never a single-task window over the corpus) and a "
     "bounded per-doc span explode (a doc fans out to "
     "ceil(tokens/len)+1 rows at most).",
@@ -1093,7 +1093,7 @@ GROUP BY stage
     "decorrelated from crawl order. Output: per-stage manifest card "
     "(sizes, difficulty range, language spread, the first docs the "
     "trainer would see). Plan: one distributed NTILE (ranks.py — "
-    "range exchange + per-partition window + broadcast offsets, no "
+    "range split + per-partition window + broadcast offsets, no "
     "single-task sort) + one per-stage window + grouped agg — the "
     "stage boundary never moves when data is repartitioned.",
 )

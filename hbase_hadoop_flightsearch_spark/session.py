@@ -13,6 +13,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def graft_cpus() -> int:
+    """Local core count: ``$SPARK_GRAFT_CPUS`` as a positive int, else
+    ``os.cpu_count()``. A malformed value raises ValueError naming the
+    variable."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return os.cpu_count() or 1
+    try:
+        cpus = int(raw)
+    except ValueError:
+        cpus = 0
+    if cpus < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}"
+        )
+    return cpus
+
+
 def get_spark(
     app_name: str = "hbase-hadoop-flightsearch-spark",
     master: str | None = None,
@@ -22,9 +40,10 @@ def get_spark(
     """Build (or fetch) a SparkSession with the engine's standard config.
 
     On a real cluster, ``master`` is left to spark-submit; locally it
-    defaults to ``local[$SPARK_GRAFT_CPUS]`` (32 in the test env).
+    defaults to ``local[N]`` with N from ``graft_cpus()``, which is
+    checked before any session is built.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = graft_cpus()
     builder = SparkSession.builder.appName(app_name)
     builder = builder.master(master or f"local[{cpus}]")
 

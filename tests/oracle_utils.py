@@ -172,10 +172,6 @@ def compare_query_to_oracle(spark, query, sf_dir: str) -> None:
     """
     import os
 
-    from hbase_hadoop_flightsearch_spark.operators.ranks import (
-        release_rank_bases,
-    )
-
     oracle = query.oracle
     if (
         os.environ.get("SWEEP_ORACLE_TIER") == "scale"
@@ -186,10 +182,6 @@ def compare_query_to_oracle(spark, query, sf_dir: str) -> None:
     sdf = query.fn(spark, sf_dir)
     spark_cols = list(sdf.columns)
     spark_rows = [tuple(r) for r in sdf.collect()]
-    # collect() above is the consuming action — the rank primitive's
-    # persisted bases can be dropped now, so a long differential run
-    # (the full suite, the sweep tool) doesn't accumulate them.
-    release_rank_bases()
 
     con = duckdb_con(sf_dir)
     # Guard against DuckDB's integer-widening types: SUM(BIGINT) returns

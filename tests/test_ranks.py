@@ -1,6 +1,6 @@
 """Distributed exact-rank primitive (operators/ranks.py): value
-equivalence against Spark's built-in single-task windows, the
-exchange-reuse guarantee, and the plan contract ordered by VERDICT
+equivalence against Spark's built-in single-task windows, partition ids
+that every evaluation agrees on, and the plan contract ordered by VERDICT
 r10/r11 #1 — none of the nine migrated plans may feed a Window from an
 Exchange SinglePartition (the single-task global sort this primitive
 exists to eliminate)."""
@@ -122,34 +122,42 @@ def test_empty_input(skewed_df):
     )
 
 
-def test_ranged_base_pinned_once(spark, tmp_path):
-    """The primitive's two branches (local ranks, per-partition offsets)
-    key on spark_partition_id() over the range exchange, and
-    repartitionByRange SAMPLES its bounds from the input's row order —
-    so both branches MUST read ONE materialization of the ranged base.
-    r12 found the optimizer-reuse version of this guarantee silently
-    broken for hash-aggregate inputs (column pruning de-canonicalizes
-    the two exchange subplans, ReuseExchange never fires, each branch
-    re-samples bounds independently — agg_mann_whitney_u flipped values
-    run to run); the engine now persists the base, asserted here via
-    the two InMemoryTableScans in the executed plan (both consumers
-    cache-read; the cached child still shows the single range exchange,
-    and the source is scanned at most once)."""
+def test_pids_consistent_from_literal_bounds(spark, tmp_path):
+    """Both branches of the primitive (local ranks, per-partition
+    offsets) key on __gr_pid, so every evaluation must assign each row
+    the same pid. The pid is a CASE WHEN of the row's keys against
+    literal bounds sampled once at build time: the plan carries no
+    cached base, no range exchange and no spark_partition_id; the same
+    rows in another partitioning and order get the same pids; and pids
+    never decrease along the global order (partition i sorts wholly
+    before partition i+1)."""
+    from hbase_hadoop_flightsearch_spark.operators import ranks
+
     path = str(tmp_path / "t.parquet")
     spark.range(0, 2000).select(
         F.col("id"), (F.col("id") % 97).alias("k")
     ).write.mode("overwrite").parquet(path)
     df = spark.read.parquet(path)
-    out = with_global_row_number(df, [F.col("k"), F.col("id")], "rn")
+    order = [F.desc("k"), F.col("id")]
+    out = with_global_row_number(df, order, "rn")
     out.collect()
     final = out._jdf.queryExecution().executedPlan().toString()
-    # two TableCacheQueryStages = both branches consume the ONE cached
-    # ranged base; the cached child's printed plan carries the single
-    # range exchange. (FileScan counts are meaningless here: every
-    # InMemoryRelation print nests the full child plan again.)
-    assert final.count("TableCacheQueryStage") >= 2, final
-    assert "InMemoryTableScan" in final, final
-    assert "rangepartitioning" in final, final
+    assert "InMemoryTableScan" not in final, final
+    assert "rangepartitioning" not in final, final
+    assert "spark_partition_id" not in final.lower(), final
+    assert "CASE WHEN" in final and "AS __gr_pid" in final, final
+
+    keys = ranks._sort_keys(order)
+    bounds = ranks._range_bounds(df, order, keys, 8)
+    assert 1 < len(bounds) <= 7
+    pid = ranks._pid_expr(keys, bounds, 0, len(bounds)).alias("pid")
+    a = {r.id: r.pid for r in df.select("id", pid).collect()}
+    shuffled = df.repartition(5, "k").sortWithinPartitions(F.rand(3))
+    b = {r.id: r.pid for r in shuffled.select("id", pid).collect()}
+    assert a == b
+    ordered = [r.pid for r in df.orderBy(*order).select(pid).collect()]
+    assert ordered == sorted(ordered)
+    assert set(ordered) == set(range(len(bounds) + 1))
 
 
 def _window_fed_by_single_partition(plan: str) -> list[str]:
@@ -177,14 +185,19 @@ def _window_fed_by_single_partition(plan: str) -> list[str]:
 def test_no_single_task_window_in_migrated_plans(spark, name):
     """VERDICT r10/r11 #1 done-criterion: the physical plan of each
     migrated query contains NO Window fed by Exchange SinglePartition,
-    and DOES contain the primitive's range exchange + pid-hash window
-    (proof it runs the distributed construction, not a lucky rewrite)."""
+    and DOES contain the primitive's window hash-partitioned on its
+    partition id (proof it runs the distributed construction, not a
+    lucky rewrite)."""
     df = load_all()[name].fn(spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
     hits = _window_fed_by_single_partition(plan)
     assert not hits, f"{name}: single-task Window over {hits}\n{plan}"
-    assert "rangepartitioning" in plan, f"{name}: no range exchange\n{plan}"
-    assert "__gr_pid" in plan, f"{name}: primitive not in plan\n{plan}"
+    assert "hashpartitioning(__gr_pid" in plan, (
+        f"{name}: no pid-hash exchange\n{plan}"
+    )
+    assert "windowspecdefinition(__gr_pid" in plan, (
+        f"{name}: primitive window not in plan\n{plan}"
+    )
 
 
 def test_contract_catches_the_old_shape(spark):
@@ -241,8 +254,8 @@ def test_order_stats_deterministic_over_hash_agg_input(spark):
     of the primitive used to re-sample range bounds independently
     (ReuseExchange de-canonicalized by column pruning), pairing local
     ranks with the WRONG partition offsets — nondeterministically.
-    The persisted base makes the result identical across repeated
-    evaluations, checked here via the doubled-midrank identity
+    Pids computed from literal bounds make the result identical across
+    repeated evaluations, checked here via the doubled-midrank identity
     sum(cnt * (2*cum - cnt + 1)) == n * (n + 1), which is violated
     almost surely when pids mismatch, plus run-to-run equality."""
     from hbase_hadoop_flightsearch_spark.operators.ranks import (
@@ -270,6 +283,66 @@ def test_order_stats_deterministic_over_hash_agg_input(spark):
     for s, n in results:
         assert s == n * (n + 1), (s, n)
     assert len(set(results)) == 1, results
+
+
+def test_order_stats_stable_after_clear_cache(spark):
+    """A frame built BEFORE the session's cache is cleared must still
+    rank right when it runs: nothing the primitive needs lives in the
+    cache. Hash-aggregate input (nondeterministic row order), one
+    build, clearCache(), three actions — the doubled-midrank identity
+    holds on each and all three agree."""
+    from hbase_hadoop_flightsearch_spark.operators.ranks import (
+        with_global_order_stats,
+    )
+
+    rng = random.Random(19)
+    rows = [(rng.randint(0, 3000),) for _ in range(12000)]
+    g = (
+        spark.createDataFrame(rows, "v int")
+        .repartition(9)
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    cum = with_global_order_stats(
+        g, [F.col("v")], cumsums={"c": F.col("cnt")}
+    ).agg(
+        F.sum(F.col("cnt") * (2 * F.col("c") - F.col("cnt") + 1)).alias("s"),
+        F.sum("cnt").alias("n"),
+    )
+    spark.catalog.clearCache()
+    results = [tuple(cum.collect()[0]) for _ in range(3)]
+    for s, n in results:
+        assert s == n * (n + 1), (s, n)
+    assert len(set(results)) == 1, results
+
+
+@pytest.mark.parametrize("sort", ["asc", "desc", "desc_nulls_first"])
+def test_null_order_keys_match_builtin(spark, sort):
+    """NULL order keys land where the built-in Window.orderBy puts them
+    for each direction / null ordering: the literal-bound pid must
+    honour both, or NULL rows would take the wrong global ranks."""
+    rng = random.Random(23)
+    rows = [
+        (i, None if rng.random() < 0.2 else rng.randint(0, 40),
+         rng.randint(1, 9))
+        for i in range(1500)
+    ]
+    df = spark.createDataFrame(rows, "id long, k long, v long").repartition(7)
+    order = [getattr(F.col("k"), sort)(), F.col("id")]
+    got = with_global_cumsum(
+        with_global_row_number(df, order, "rn"), order, F.col("v"), "c"
+    )
+    w = Window.orderBy(*order)
+    exp = df.select(
+        "id",
+        F.row_number().over(w).cast("long").alias("rn"),
+        F.sum("v").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ).cast("long").alias("c"),
+    )
+    assert {r.id: (r.rn, r.c) for r in got.collect()} == {
+        r.id: (r.rn, r.c) for r in exp.collect()
+    }
 
 
 def test_global_lead_matches_builtin(spark):
@@ -394,22 +467,6 @@ def test_trailing_null_measure_partition(spark):
     assert got == want
     assert got[999] == 499  # carried prefix, NOT NULL
     assert got[500] == 499
-
-
-def test_release_rank_bases_lifecycle(spark):
-    """The persist pin stays for correctness; release_rank_bases()
-    frees every tracked base after the consuming action (ADVICE r12)."""
-    from hbase_hadoop_flightsearch_spark.operators import ranks
-
-    ranks.release_rank_bases()  # clean slate from earlier tests
-    df = spark.range(100).withColumn("v", F.col("id") % 7)
-    with_global_row_number(df, [F.col("v"), F.col("id")], "rn").collect()
-    with_global_cumsum(df, [F.col("id")], F.col("v"), "cum").collect()
-    assert len(ranks._LIVE_BASES) == 2
-    assert ranks.release_rank_bases() == 2
-    assert ranks._LIVE_BASES == []
-    # idempotent and safe to call with nothing pinned
-    assert ranks.release_rank_bases() == 0
 
 
 def test_global_topk_matches_rank_filter_idiom(spark):

@@ -1128,3 +1128,58 @@ def test_batch_merge_upsert_rollup_actions(spark):
     df = q.fn(spark, "/root/testdata/sf0.001")
     acts = {r["merge_action"] for r in df.select("merge_action").distinct().collect()}
     assert acts == {"insert", "keep", "update"}
+
+
+def test_attribution_exact_across_pre_epoch_hour_boundaries(spark):
+    """attribute_purchases bands its join on (user, hour bucket). Views
+    and purchases straddling pre-epoch hour boundaries (negative
+    unix_micros, where the bucket cast truncates toward zero and bucket
+    0 spans two hours) must give exactly the pairs of the unbanded
+    user_id join with the same time predicate."""
+    import random
+
+    from hbase_hadoop_flightsearch_spark.streaming.joins import (
+        attribute_purchases,
+    )
+
+    hour = 3_600_000_000
+    rng = random.Random(29)
+    edges = [k * hour + d for k in range(-4, 3) for d in (-1, 0, 1)]
+    micros = edges + [rng.randint(-4 * hour, 2 * hour) for _ in range(400)]
+    rows = [
+        (i, rng.randint(0, 2), us, "view" if i % 2 else "purchase")
+        for i, us in enumerate(micros + edges)
+    ]
+    events = spark.createDataFrame(
+        rows, "event_id long, user_id long, us long, event_type string"
+    ).select(
+        "event_id", "user_id", "event_type",
+        F.timestamp_micros("us").alias("ts"),
+    )
+    views = events.filter(F.col("event_type") == "view")
+    purchases = events.filter(F.col("event_type") == "purchase")
+    got = _sorted_rows(attribute_purchases(views, purchases))
+
+    v, p = views.alias("v"), purchases.alias("p")
+    want = _sorted_rows(
+        v.join(
+            p,
+            (F.col("v.user_id") == F.col("p.user_id"))
+            & (F.col("p.ts") > F.col("v.ts"))
+            & (F.col("p.ts") <= F.col("v.ts") + F.expr("interval 1 hour")),
+        ).select(
+            F.col("v.event_id"),
+            F.col("p.event_id"),
+            F.col("v.user_id"),
+            (
+                (F.unix_micros("p.ts") - F.unix_micros("v.ts"))
+                / F.lit(1_000_000)
+            ).cast("bigint"),
+        )
+    )
+    assert got == want
+    # the fixture really has pre-epoch pairs that cross an hour boundary
+    us = {r[0]: r[2] for r in rows}
+    assert any(
+        us[r[0]] < 0 and us[r[0]] // hour != us[r[1]] // hour for r in want
+    )

@@ -60,9 +60,6 @@ import sys, time
 SF_DIR = sys.argv[2]
 sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession
-from hbase_hadoop_flightsearch_spark.operators.ranks import (
-    release_rank_bases,
-)
 from hbase_hadoop_flightsearch_spark.plans.registry import load_all
 names = sys.argv[1].split(",")
 spark = (SparkSession.builder.master("local[16]")
@@ -93,8 +90,6 @@ for name in names:
     except Exception as ex:
         msg = str(ex).replace(chr(10), " ")[:250]
         print(f"FAIL {name} {msg}", flush=True)
-    finally:
-        release_rank_bases()
 spark.stop()
 """
 
