@@ -4,24 +4,25 @@ Near-dup *pairs* (dedup.py) are only half the dedup story: production
 corpus prep needs *clusters* — if A~B and B~C, all three are one duplicate
 group even when A~C was never emitted — plus one canonical keeper per
 cluster. That grouping is connected components on the pair graph, an
-inherently ITERATIVE computation no single SQL join can express (but a
-recursive CTE can, which is exactly what the DuckDB oracle uses).
+inherently ITERATIVE computation no single SQL join can express (the
+DuckDB oracle unrolls bounded min-label propagation as a CTE chain).
 
-Spark-first design: driver-side loop of min-label propagation —
-  label(v) <- min(label(v), min over neighbors of label(u))
-each round is one shuffle (groupBy dst) + one join; rounds needed = graph
-diameter. `localCheckpoint()` truncates lineage each round, otherwise the
-iterated plan grows exponentially in Catalyst.
+Spark-first design: one driver-side loop of alternating large-star /
+small-star contraction (Kiveris et al., "Connected Components in
+MapReduce and Beyond", SoCC 2014) over the normalized edge list. Each
+round is a few groupBy-min + join shuffles of O(edges) rows and the
+round count is O(log n), so long chains (spatial DBSCAN density chains,
+co-purchase components) converge as fast as the near-clique clusters of
+near-dup pairs; min-label propagation would need one round per hop of
+diameter. `localCheckpoint()` truncates lineage each round, otherwise
+the iterated plan grows exponentially in Catalyst. The result is
+property-tested against a sequential union-find.
 
-Scale notes (100 TB): near-dup components are tiny dense clusters (near
-cliques), so diameter — and the round count — stays 2-4 regardless of
-corpus size; each round is a self-bounded shuffle of O(edges). For
-adversarial long-chain graphs `connected_components_star` implements the
-published fix — alternating large-star/small-star contraction (Kiveris et
-al.), O(log n) rounds; both implementations are property-tested against a
-sequential union-find. On a cluster, replace localCheckpoint with a
-reliable checkpoint dir so a lost executor doesn't recompute the whole
-chain.
+Scale notes (100 TB): the loop only ever touches pair endpoints
+(isolated vertices re-join as singletons after convergence), and
+near-dup pair graphs are sparse. On a cluster, replace localCheckpoint
+with a reliable checkpoint dir so a lost executor doesn't recompute the
+whole chain.
 """
 
 from __future__ import annotations
@@ -60,104 +61,10 @@ FROM comp
 """
 
 
-def connected_components(
-    vertices: DataFrame, pairs: DataFrame, max_iters: int = 15
-) -> DataFrame:
-    """(doc_id, component_id) for `vertices` (col doc_id) under undirected
-    `pairs` (cols d1, d2). component_id = min doc_id in the component.
-
-    Precondition: every pair endpoint must be a doc_id of `vertices`.
-    Endpoints are not semi-joined back to the vertex set (each round's
-    union-aggregate carries every propagated label), so an endpoint
-    outside it comes back as a label row of its own. Every caller here
-    derives its pairs from its vertex table.
-
-    Convergence detection: sum(component_id) is strictly decreasing while
-    any label changes (labels only ever drop to a smaller doc_id), so two
-    equal consecutive sums == fixpoint. One extra round pays for the test;
-    no per-row change flags or subtraction joins needed."""
-    edges = (
-        pairs.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
-        .union(pairs.select(F.col("d2").alias("src"), F.col("d1").alias("dst")))
-        # LAZY: pair mining still runs ONCE (blocks persist on first use,
-        # round 1's convergence job), but no separate materializing job.
-        .localCheckpoint(eager=False)
-    )
-    # Iterate ONLY over pair endpoints (r15, guide §2.3 — shuffle fewer
-    # bytes): a vertex with no incident pair can never change its label,
-    # so carrying the full vertex set through every round's join + agg +
-    # convergence sum is pure overhead. Near-dup pair graphs are sparse —
-    # at 100 TB the active set is orders of magnitude smaller than the
-    # corpus. Isolated vertices re-join as their own singleton components
-    # after convergence, which is their label by definition. The
-    # symmetrized edge list's src column covers both endpoints. Round
-    # count is unchanged (isolated labels contributed a constant to the
-    # convergence sum); connected_components_star already had this shape
-    # (roots from edges, vertices left-joined at the end).
-    endpoints = edges.select(F.col("src").alias("doc_id")).distinct()
-    active = vertices.join(endpoints, "doc_id", "semi")
-    isolated = vertices.join(endpoints, "doc_id", "left_anti")
-    labels = active.select("doc_id", F.col("doc_id").alias("component_id"))
-    prev_sum = None
-    for _ in range(max_iters):
-        # Round update as ONE aggregate (r16): new label = min over the
-        # vertex's own label UNION the labels propagated along in-edges.
-        # groupBy-min fuses the r15 shape's neighbor-min aggregate AND
-        # its least(own, nbr_min) left join into a single exchange —
-        # one join fewer per round (guide §2.4 remove shuffles; A/B at
-        # sf0.1: seat 3.70 -> 3.41 s, AQE stage-jobs 26 -> 21 per run).
-        # Row-identical: every labels vertex survives via the union's
-        # labels branch, and min(own ∪ propagated) == least(own,
-        # coalesce(nbr_min, own)). Convergence sums are therefore the
-        # same sequence, so round counts are unchanged too.
-        prop = edges.join(labels, edges.src == labels.doc_id).select(
-            F.col("dst").alias("doc_id"), "component_id"
-        )
-        labels = (
-            labels.unionByName(prop)
-            .groupBy("doc_id")
-            .agg(F.min("component_id").alias("component_id"))
-            # lazy checkpoint: the convergence sum below is the
-            # materializing action — one job per round, not two (r15).
-            .localCheckpoint(eager=False)
-        )
-        cur_sum = labels.agg(F.sum("component_id")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError(
-            f"connected components did not converge in {max_iters} rounds"
-        )
-    return labels.unionByName(
-        isolated.select("doc_id", F.col("doc_id").alias("component_id"))
-    )
-
-
-@register(
-    "dedup_cc_clusters",
-    oracle=_CC_ORACLE,
-    oracle_scale=scale_variant(_CC_ORACLE),
-    doc="Connected components over near-dup pairs: every doc labeled with "
-    "its duplicate-cluster id (min doc_id reachable), cluster size, and a "
-    "deterministic keeper flag. Iterative min-label propagation vs a "
-    "recursive-CTE oracle.",
-)
-def dedup_cc_clusters(
-    spark: SparkSession, sf_dir: str, max_iters: int = 15
-) -> DataFrame:
-    """Transitive closure of dedup_ngram_jaccard pairs (jaccard >= 0.5)."""
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("d1", "d2")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    labels = connected_components(docs, pairs, max_iters)
-    return labels.select(
-        "doc_id",
-        "component_id",
-        F.count(F.lit(1))
-        .over(Window.partitionBy("component_id"))
-        .alias("n_members"),
-        (F.col("doc_id") == F.col("component_id")).alias("is_keeper"),
-    )
+# Safety bound on star-contraction rounds. Rounds grow as O(log n), so
+# this leaves a wide margin: the most any shipped caller has needed is 6
+# (spatial_dbscan at sf0.1).
+CC_MAX_ROUNDS = 20
 
 
 def _symmetric(edges: DataFrame) -> DataFrame:
@@ -202,26 +109,31 @@ def _star_round(edges: DataFrame, large: bool) -> DataFrame:
     return out.filter(F.col("src") != F.col("dst")).distinct()
 
 
-def connected_components_star(
-    vertices: DataFrame, pairs: DataFrame, max_iters: int = 20
-) -> DataFrame:
-    """(doc_id, component_id) via alternating large-star/small-star — the
-    published O(log n)-round MapReduce CC algorithm. Same contract as
-    connected_components(); use this variant when components can be long
-    chains (label propagation needs diameter rounds, star contraction
-    needs ~log n). Edges stay normalized (src > dst); fixpoint = the
-    edge set is a STAR FOREST (see the convergence note below)."""
+def connected_components(vertices: DataFrame, pairs: DataFrame) -> DataFrame:
+    """(doc_id, component_id) for every doc_id of `vertices` under
+    undirected `pairs` (cols d1, d2); component_id = min doc_id in the
+    component.
+
+    Alternating large-star/small-star rounds over the normalized edge set
+    (src > dst) until it is a star forest, at most CC_MAX_ROUNDS rounds,
+    else RuntimeError. Each round's star-forest probe is a Spark action,
+    so every round runs before the caller gets its DataFrame.
+
+    Pair endpoints outside `vertices` still link the components they
+    touch (and can be their min label), but get no row of their own: the
+    final left join keeps exactly the rows of `vertices`."""
     edges = (
         pairs.select(
             F.greatest("d1", "d2").alias("src"),
             F.least("d1", "d2").alias("dst"),
         )
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        # lazy: round 1's convergence check is the materializing action
+        # No distinct: a duplicate pair only repeats rows of round 1's
+        # large-star output, which is made distinct. Lazy: round 1's
+        # convergence check is the materializing action.
         .localCheckpoint(eager=False)
     )
-    for _ in range(max_iters):
+    for _ in range(CC_MAX_ROUNDS):
         edges = _star_round(edges, large=True)
         # lazy checkpoint: the star-forest convergence probe below
         # materializes it — one fewer job per round (r15).
@@ -234,13 +146,11 @@ def connected_components_star(
         # set-equality fixpoint is a star forest (a vertex that is both
         # src and dst gets re-pointed below itself by the large round; a
         # src with two roots gets its roots linked by the small round —
-        # both contradict invariance). It therefore fires exactly one
-        # round EARLIER than the r15 consecutive-set-equality check
-        # (which paid a full extra round to observe no change), needs no
-        # prev-round state, and costs ONE aggregate job per round
-        # instead of two exceptAll anti-join jobs. Soundness does not
-        # rest on a checksum: the probe reads the actual degree/role
-        # structure, not a collidable signature.
+        # both contradict invariance). It fires one round earlier than a
+        # consecutive-set-equality check, needs no prev-round state, and
+        # costs ONE aggregate job per round. Soundness does not rest on a
+        # checksum: the probe reads the actual degree/role structure,
+        # not a collidable signature.
         roles = (
             edges.select(F.col("src").alias("v"), F.lit(1).alias("s"), F.lit(0).alias("d"))
             .unionAll(
@@ -260,11 +170,12 @@ def connected_components_star(
             break
     else:
         raise RuntimeError(
-            f"star contraction did not converge in {max_iters} rounds"
+            f"connected components did not converge in {CC_MAX_ROUNDS} rounds"
         )
-    # After convergence every edge points directly at its component root.
-    roots = edges.groupBy(F.col("src").alias("doc_id")).agg(
-        F.min("dst").alias("component_id")
+    # The probe proved every src carries exactly one edge, and that edge
+    # points at its component root: the roots are a plain projection.
+    roots = edges.select(
+        F.col("src").alias("doc_id"), F.col("dst").alias("component_id")
     )
     return (
         vertices.join(roots, "doc_id", "left")
@@ -275,7 +186,31 @@ def connected_components_star(
     )
 
 
-PAGERANK_DAMPING = 0.85
+@register(
+    "dedup_cc_clusters",
+    oracle=_CC_ORACLE,
+    oracle_scale=scale_variant(_CC_ORACLE),
+    doc="Connected components over near-dup pairs: every doc labeled with "
+    "its duplicate-cluster id (min doc_id reachable), cluster size, and a "
+    "deterministic keeper flag. Large-star/small-star contraction "
+    "(O(log n) rounds) vs a bounded min-label-propagation oracle.",
+)
+def dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Transitive closure of dedup_ngram_jaccard pairs (jaccard >= 0.5)."""
+    pairs = dedup_ngram_jaccard(spark, sf_dir).select("d1", "d2")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    labels = connected_components(docs, pairs)
+    return labels.select(
+        "doc_id",
+        "component_id",
+        F.count(F.lit(1))
+        .over(Window.partitionBy("component_id"))
+        .alias("n_members"),
+        (F.col("doc_id") == F.col("component_id")).alias("is_keeper"),
+    )
+
+
+PAGERANK_DAMPING = 0.85  # pagerank_int applies it as (85 * in) div 100
 PAGERANK_ITERS = 5
 # supplier node ids are offset into their own range so the bipartite
 # graph lives in one integer id space
@@ -309,80 +244,24 @@ def _customer_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    iters: int = PAGERANK_ITERS,
-    damping: float = PAGERANK_DAMPING,
-) -> DataFrame:
-    """Power iteration on a directed edge list: per round, each node
-    spreads rank/out_degree along its out-edges; rank' = (1-d)/N + d*in.
-
-    Scale shape: one Exchange(dst) groupBy per round over O(edges) rows;
-    degrees and the node set are computed once and reused. Lineage is
-    truncated per round (localCheckpoint) exactly as in the CC operators.
-    The symmetrized graph has no dangling nodes by construction.
-    """
-    edges = edges.persist()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()
-    out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    base = (1.0 - damping) / n_nodes
-    for _ in range(iters):
-        contribs = (
-            edges.join(ranks, edges.src == ranks.node)
-            .join(out_deg, "src")
-            .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-        )
-        incoming = contribs.groupBy("dst").agg(F.sum("c").alias("in_sum"))
-        ranks = (
-            nodes.join(incoming, nodes.node == incoming.dst, "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + damping * F.coalesce(F.col("in_sum"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    edges.unpersist()
-    return ranks
-
-
-def pagerank_top_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Most-central suppliers in the purchase graph (deterministic
-    ordering: rank desc rounded, then node id) — the user-facing output;
-    NumPy power-iteration agreement asserted in tests/test_pagerank.py."""
-    ranks = pagerank(_customer_supplier_edges(spark, sf_dir))
-    return (
-        ranks.filter(F.col("node") >= _SUPP_OFFSET)
-        .select(
-            (F.col("node") - _SUPP_OFFSET).alias("suppkey"),
-            F.round("rank", 8).alias("rank"),
-        )
-        .orderBy(F.desc("rank"), "suppkey")
-        .limit(20)
-    )
-
-
 PR_SCALE = 10**12  # picorank units for the integer fixed-point variant
 
 
 def pagerank_int(edges: DataFrame, iters: int = PAGERANK_ITERS) -> DataFrame:
-    """Integer fixed-point PageRank (the value-oracle twin of
-    pagerank()): ranks carried in picorank BIGINTs, every division a
-    floor division — contrib = rank div deg, damping = (85*in) div 100,
-    base = (15*SCALE) div (100*N). Deterministic in any engine, so the
-    DuckDB oracle replays the whole trajectory with unrolled CTEs (the
-    quantized-Lloyd's device). Mass is conserved only up to the floor
-    remainders — a documented property of the fixed-point variant, not
-    a bug; the float production path (pagerank) keeps its NumPy test."""
+    """Integer fixed-point PageRank by power iteration on a directed edge
+    list: per round, each node spreads rank/out_degree along its
+    out-edges; rank' = base + d*in. Ranks are carried in picorank
+    BIGINTs, every division a floor division — contrib = rank div deg,
+    damping = (85*in) div 100, base = (15*SCALE) div (100*N).
+    Deterministic in any engine, so the DuckDB oracle replays the whole
+    trajectory with unrolled CTEs (the quantized-Lloyd's device). Mass is
+    conserved only up to the floor remainders — a documented property of
+    the fixed-point variant, not a bug; tests pin the ranks to a float
+    NumPy power iteration within that quantization error.
+
+    Scale shape: one Exchange(dst) groupBy per round over O(edges) rows;
+    degrees and the node set are computed once and reused, and lineage
+    is truncated per round (localCheckpoint)."""
     edges = edges.persist()
     nodes = (
         edges.select(F.col("src").alias("node"))
@@ -485,10 +364,9 @@ FROM {prev} WHERE node >= {_SUPP_OFFSET}
     "BIGINTs, floor divisions for contrib/damping/base — the same "
     "quantization device as ml_kmeans_clusters and the Markov solve), "
     "so DuckDB replays all 5 rounds with unrolled CTEs and every "
-    "supplier's exact rank value is hash-checked. The float production "
-    "path (pagerank / pagerank_top_suppliers) keeps its NumPy "
-    "power-iteration agreement test, and a test pins the fixed-point "
-    "ranks to the float ranks within quantization error.",
+    "supplier's exact rank value is hash-checked, and a test pins the "
+    "fixed-point ranks to a float NumPy power iteration within "
+    "quantization error.",
 )
 def graph_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = pagerank_int(_customer_supplier_edges(spark, sf_dir))
@@ -705,8 +583,8 @@ FROM m_cnt, internal, sq
     "segmentation partition. Exact arithmetic: Q = (4m*L_int - "
     "sum(d_c^2)) / (4m^2) over BIGINTs, divided once and rounded — no "
     "float accumulation. Spark shape: joinless capped-basket pair "
-    "mining (one shuffle), the iterative CC loop on the strong "
-    "subgraph (O(diameter) rounds, edges localCheckpointed), then "
+    "mining (one shuffle), star-contraction CC on the strong "
+    "subgraph (O(log n) rounds, edges localCheckpointed), then "
     "O(V+E) label joins and O(communities) mass aggregation.",
 )
 def graph_modularity_strong(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1173,7 +1051,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             # round still builds on a truncated LogicalRDD, but the
             # fixed {LPA_ROUNDS}-round loop schedules one job instead
             # of one per round (r15). No persist lifecycle rides on
-            # round boundaries here (unlike pagerank, which must stay
+            # round boundaries here (unlike pagerank_int, which must stay
             # eager so edges.unpersist() runs after the rounds).
             .localCheckpoint(eager=False)
         )

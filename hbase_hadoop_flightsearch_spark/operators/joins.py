@@ -1054,9 +1054,9 @@ LEFT JOIN nbr ON p.id = nbr.id
 def spatial_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     R = DBSCAN_EPS
 
-    # density clusters can be long spatial CHAINS (diameter >> log n),
-    # exactly the case the large-star/small-star variant exists for
-    from ..operators.graph import connected_components_star
+    # density clusters can be long spatial CHAINS (diameter >> log n);
+    # star-contraction CC closes them in O(log n) rounds
+    from ..operators.graph import connected_components
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     pts = cust.select(
@@ -1121,7 +1121,7 @@ def spatial_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("i1") < F.col("i2"))
         .select(F.col("i1").alias("d1"), F.col("i2").alias("d2"))
     )
-    comp = connected_components_star(
+    comp = connected_components(
         core.select(F.col("id").alias("doc_id")), ce
     ).select(
         F.col("doc_id").alias("id"),

@@ -170,8 +170,11 @@ GROUP BY k.lang_pred
     doc="Production corpus-prep composite: quality filter -> lang-ID -> "
     "NEAR-dup clustering (ngram-jaccard pairs + connected components) -> "
     "one keeper per cluster -> per-language token budget. The iterative "
-    "clustering step runs the distributed CC loop; the oracle closes the "
-    "same graph with a recursive CTE.",
+    "clustering step runs star-contraction connected components; the "
+    "oracle closes the same graph with bounded min-label propagation. "
+    "The builder is not lazy: it runs Spark jobs before it returns — the "
+    "count that materializes the kept-docs checkpoint, then per CC round "
+    "one star-contraction round and one star-forest probe.",
 )
 def pipeline_corpus_prep_neardup(
     spark: SparkSession, sf_dir: str
@@ -241,7 +244,7 @@ def pipeline_corpus_prep_neardup(
     members = labels.groupBy("component_id").agg(
         F.count(F.lit(1)).alias("n_members")
     )
-    # Min-label CC makes component_id == min doc_id in the component ==
+    # connected_components labels each component with its min doc_id ==
     # the keeper's doc_id, so the keeper row needs no separate
     # filter(doc_id == component_id) + member join: the member counts
     # join the kept table directly on component_id = doc_id (r15 — one

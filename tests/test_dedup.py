@@ -32,10 +32,12 @@ def test_simhash_pairs_are_true_near_dups(spark, sf_correctness):
 
 
 def test_connected_components_closes_chains(spark):
-    """A 5-node path graph (0-1-2-3-4) plus an isolated vertex: label
-    propagation must close the full chain (diameter 4 > 1 round) and leave
-    the singleton alone — proof of real transitivity, since the corpus'
-    near-dup clusters are near-cliques that converge in one round."""
+    """A 5-node path graph (0-1-2-3-4) plus an isolated vertex, and a
+    40-vertex path: the CC loop must close each full chain and leave the
+    singleton alone — proof of real transitivity, since the corpus'
+    near-dup clusters are near-cliques that converge in one round. The
+    40-path has diameter 39, past any per-hop round budget; star
+    contraction needs O(log n) rounds."""
     from hbase_hadoop_flightsearch_spark.operators.graph import (
         connected_components,
     )
@@ -49,6 +51,41 @@ def test_connected_components_closes_chains(spark):
         for r in connected_components(vertices, chain).collect()
     }
     assert got == {(i, 0) for i in range(5)} | {(5, 5)}
+
+    vertices, path = _path_graph(spark, 40)
+    got = {
+        (r.doc_id, r.component_id)
+        for r in connected_components(vertices, path).collect()
+    }
+    assert got == {(i, 0) for i in range(40)}
+
+
+def _path_graph(spark, n):
+    """(vertices, pairs) of the path 0-1-...-(n-1), edges shuffled so no
+    round can lean on input order."""
+    import random
+
+    edges = [(i, i + 1) for i in range(n - 1)]
+    random.Random(3).shuffle(edges)
+    return (
+        spark.createDataFrame([(i,) for i in range(n)], ["doc_id"]),
+        spark.createDataFrame(edges, ["d1", "d2"]),
+    )
+
+
+def test_connected_components_fails_loudly_when_unconverged(
+    spark, monkeypatch
+):
+    """A round budget too small for the graph must raise, never return a
+    partial labeling."""
+    import pytest
+
+    from hbase_hadoop_flightsearch_spark.operators import graph
+
+    monkeypatch.setattr(graph, "CC_MAX_ROUNDS", 1)
+    vertices, path = _path_graph(spark, 40)
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        graph.connected_components(vertices, path)
 
 
 def test_mllib_minhash_lsh_agrees(spark, sf_correctness):

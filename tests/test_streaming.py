@@ -5,6 +5,7 @@ sink, and the incremental result must equal the batch result."""
 from __future__ import annotations
 
 import os
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -1096,7 +1097,19 @@ def test_tws_map_state_converges_to_batch(spark, sf_smoke, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        # Wait for the data, not for termination: the ProcessingTime time
+        # mode that TTL needs keeps an availableNow query running no-data
+        # batches, so it never terminates on its own (and never reports
+        # "no new data", so processAllAvailable() blocks for good too).
+        # The first batch without input rows runs only after every data
+        # batch has committed to the sink.
+        deadline = time.monotonic() + 120
+        while q.isActive and not any(
+            p["numInputRows"] == 0 for p in q.recentProgress
+        ):
+            assert time.monotonic() < deadline, "no idle batch in 120 s"
+            time.sleep(0.2)
+        assert q.exception() is None, q.exception()
         # Update mode emits one cumulative row per touched key per
         # microbatch; collect() order across batches is NOT a contract
         # (ADVICE r6). n_events is a monotone cumulative counter, so the
@@ -1114,6 +1127,9 @@ def test_tws_map_state_converges_to_batch(spark, sf_smoke, tmp_path):
     finally:
         if old is not None:
             spark.conf.set(key, old)
+        for q in spark.streams.active:
+            if q.name == "tws_map_sink":
+                q.stop()
 
 
 def test_batch_merge_upsert_rollup_actions(spark):
