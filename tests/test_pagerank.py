@@ -40,10 +40,7 @@ def test_pagerank_matches_numpy_reference(spark):
     """The integer fixed-point PageRank must agree with the float power
     iteration within quantization error: each floor costs < 1 pico-unit
     per term, compounded over 5 damped rounds the drift stays far below
-    the rank magnitudes (~1e12/N). The registered query must return
-    exactly its supplier ranks."""
-    from hbase_hadoop_flightsearch_spark.plans.registry import load_all
-
+    the rank magnitudes (~1e12/N)."""
     edges = _customer_supplier_edges(spark, SF)
     edge_list = [(r["src"], r["dst"]) for r in edges.collect()]
     got = {r["node"]: r["rank"] for r in pagerank_int(edges).collect()}
@@ -63,11 +60,29 @@ def test_pagerank_matches_numpy_reference(spark):
     # A rank floor exists for every node: the fixed-point (1-d)/N.
     assert min(got.values()) >= (15 * PR_SCALE) // (100 * n)
 
+
+def test_pagerank_fixed_point_tracks_float(spark):
+    """The registered query's supplier ranks must be exactly those of
+    pagerank_int, and track the float power iteration within the same
+    1e6-pico quantization bound."""
+    from hbase_hadoop_flightsearch_spark.plans.registry import load_all
+
     rows = load_all()["graph_pagerank_suppliers"].fn(spark, SF).collect()
     assert rows
-    assert {r.suppkey: r.rank_pico for r in rows} == {
-        k - _SUPP_OFFSET: v for k, v in got.items() if k >= _SUPP_OFFSET
+    got = {r.suppkey: r.rank_pico for r in rows}
+    assert all(v > 0 for v in got.values())
+    edges = _customer_supplier_edges(spark, SF)
+    assert got == {
+        r["node"] - _SUPP_OFFSET: r["rank"]
+        for r in pagerank_int(edges).collect()
+        if r["node"] >= _SUPP_OFFSET
     }
+    edge_list = [(r["src"], r["dst"]) for r in edges.collect()]
+    want = _reference(edge_list, PAGERANK_ITERS, PAGERANK_DAMPING)
+    fl = {k - _SUPP_OFFSET: v for k, v in want.items() if k >= _SUPP_OFFSET}
+    assert set(got) == set(fl)
+    for k, v in got.items():
+        assert abs(v - fl[k] * PR_SCALE) <= 1e6, (k, v, fl[k])
 
 
 def test_kcore_matches_sequential_peeling(spark, sf_smoke):
