@@ -82,48 +82,10 @@ def _driver_failed_names() -> set[str]:
     return _driver_history()[1]
 
 
-def _r6_manifest_names() -> set[str]:
-    """Registry names that existed at the end of round 6 (frozen manifest);
-    used to age-prioritize the never-driver-checked queue."""
-    return _manifest_tiers()[0] if _manifest_tiers() else set()
-
-
-def _manifest_tiers() -> list[set[str]]:
-    """Frozen end-of-round registry manifests (tools/registry_names_r*.txt),
-    oldest round first. The never-driver-checked queue drains by manifest
-    age: a name frozen in an older manifest always precedes one first seen
-    in a newer manifest (or never frozen), so each round's additions queue
-    BEHIND every earlier round's unchecked tail and the oldest debt clears
-    first (VERDICT r6 #1, generalized for round 8+)."""
-    import glob
-    import os
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-
-    def round_no(path: str) -> int:
-        # NUMERIC sort: lexicographic glob order would place r10 before
-        # r6 and invert the age priority (caught by the r7 manifest test
-        # the moment registry_names_r10.txt was frozen).
-        m = re.search(r"registry_names_r(\d+)\.txt$", path)
-        return int(m.group(1)) if m else 0
-
-    tiers: list[set[str]] = []
-    paths = glob.glob(os.path.join(here, "tools", "registry_names_r*.txt"))
-    for path in sorted(paths, key=round_no):
-        try:
-            with open(path) as f:
-                tiers.append({line.strip() for line in f if line.strip()})
-        except OSError:
-            continue
-    return tiers
-
-
 def _ordered_queries(
     allq: list,
     checked: set[str],
     failed: set[str],
-    legacy: set[str],
     seed: int,
 ) -> list:
     """Pure ordering core (injectable state, so tests can synthesize any
@@ -132,15 +94,10 @@ def _ordered_queries(
 
     Order: latest-check-FAILED names first (alphabetical, so even the
     smallest driver prefix re-verifies a fix), then never-value-hashed
-    names by manifest age (oldest frozen-manifest tier first, each tier
-    round-robin interleaved across source modules/families), then the
-    already-green names in a final family interleave. Module order and
-    member order rotate by the round seed so repeat passes vary which
-    member of each family leads.
-
-    `legacy` is either a single set (one legacy tier — the pre-r8 shape,
-    kept for the synthetic regime tests) or a list of sets ordered oldest
-    round first (tools/registry_names_r*.txt manifests)."""
+    names, then the already-green names, each group round-robin
+    interleaved across source modules/families. Module order and member
+    order rotate by the round seed so repeat passes vary which member of
+    each family leads."""
     from collections import OrderedDict
 
     def interleave(queries: list) -> list:
@@ -162,24 +119,8 @@ def _ordered_queries(
                     out.append(by_module[mod].pop(0))
         return out
 
-    never = [q for q in allq if q.name not in checked]
-    seen = [q for q in allq if q.name in checked]
-    # Within the never-checked group, queries drain in manifest-age order
-    # (oldest frozen manifest first) so newly added queries cannot push a
-    # long-standing unchecked tail past the driver's ~50-query prefix
-    # (VERDICT r6 #1; tiered for r8+ so the r7 tail outranks r8 additions).
-    tiers = list(legacy) if isinstance(legacy, (list, tuple)) else [legacy]
-
-    def tier_of(name: str) -> int:
-        for i, t in enumerate(tiers):
-            if name in t:
-                return i
-        return len(tiers)
-
-    ordered: list = []
-    for i in range(len(tiers) + 1):
-        ordered.extend(interleave([q for q in never if tier_of(q.name) == i]))
-    ordered.extend(interleave(seen))
+    ordered = interleave([q for q in allq if q.name not in checked])
+    ordered.extend(interleave([q for q in allq if q.name in checked]))
     failed_first = sorted(
         (q for q in ordered if q.name in failed), key=lambda q: q.name
     )
@@ -196,7 +137,6 @@ def _family_interleaved() -> dict[str, object]:
         list(load_all().values()),
         _driver_checked_names(),
         _driver_failed_names(),
-        _manifest_tiers(),
         _round_seed(),
     )
     return {q.name: q for q in ordered}

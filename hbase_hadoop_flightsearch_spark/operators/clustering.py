@@ -2,24 +2,26 @@
 representative *iterative* algorithm (SURVEY.md §2b E11 extension): a
 driver loop over fully-distributed passes, the same shape as MLlib's
 implementation and of any large-scale corpus clustering / IVF-training
-job.
+job. The registered `ml_kmeans_clusters` runs QUANTIZED Lloyd's (integer
+points, integer distances, floored integer means; see the comment before
+KMEANS_Q), so DuckDB replays the whole trajectory exactly.
 
 Scale design (what survives 100 TB):
   - Centroids are a k x d artifact — always broadcast (inside the Arrow
     batch closure), never joined.
-  - Assignment is one `mapInPandas` scan doing a NumPy GEMM per Arrow
-    batch (same blocked-GEMM pattern as `operators/similarity.py`'s exact
-    cosine): no shuffle, no per-row Python.
+  - Assignment is one `mapInPandas` scan doing an int64 NumPy GEMM per
+    Arrow batch: no shuffle, no per-row Python.
   - The per-iteration reduction emits k partial rows PER BATCH (count,
     sqdist sum, per-dimension sums), so the shuffle per iteration is
-    O(k * d * n_batches) tiny rows, never the corpus. Only k x d floats
+    O(k * d * n_batches) tiny rows, never the corpus. Only k x d integers
     ever reach the driver.
   - Ties (equidistant centroids) break to the lowest cluster id
     (np.argmin takes the first minimum), so assignment is deterministic
     given centroids.
 
-Convergence (inertia non-increasing), agreement with a pure-NumPy
-reference, and label purity are asserted in tests/test_clustering.py.
+Convergence (integer inertia non-increasing), variance explained, and
+exact agreement with a sequential NumPy replay are asserted in
+tests/test_clustering.py.
 """
 
 from __future__ import annotations
@@ -36,142 +38,6 @@ from .similarity import _embeddings
 
 KMEANS_K = 10  # matches the label cardinality of the synthetic embeddings
 KMEANS_ITERS = 5
-
-
-_PARTIALS_SCHEMA = "cluster int, n long, sqd double, sums array<double>"
-
-
-def _assign_partials(emb: DataFrame, centroids: np.ndarray) -> DataFrame:
-    """One scan -> per-(batch, cluster) partial stats. `centroids` ships
-    in the task closure (k x d — broadcast-sized by construction)."""
-    C = centroids.copy()
-    c_sq = (C**2).sum(axis=1)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["v"].to_numpy())
-            d2 = (X**2).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + c_sq[None, :]
-            cl = d2.argmin(axis=1)
-            out = []
-            for j in np.unique(cl):
-                mask = cl == j
-                out.append(
-                    {
-                        "cluster": int(j),
-                        "n": int(mask.sum()),
-                        "sqd": float(np.maximum(d2[mask, j], 0.0).sum()),
-                        "sums": X[mask].sum(axis=0).tolist(),
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return emb.mapInPandas(gen, _PARTIALS_SCHEMA)
-
-
-def _reduce_partials(partials: DataFrame) -> tuple[dict, float]:
-    """Merge batch partials to per-cluster (n, dim-sums) + global inertia.
-    The array sums are exploded AFTER batch-level reduction, so the
-    exchange carries k * d * n_batches scalars, not vectors of the corpus."""
-    per_cluster = (
-        partials.select(
-            "cluster", "n", "sqd", F.posexplode("sums").alias("dim", "s")
-        )
-        .groupBy("cluster", "dim")
-        .agg(
-            F.sum("s").alias("s"),
-            # n/sqd repeat once per dim within a batch row; take them via
-            # a dim-0 sum to count each batch exactly once
-            F.sum(F.when(F.col("dim") == 0, F.col("n"))).alias("n0"),
-            F.sum(F.when(F.col("dim") == 0, F.col("sqd"))).alias("sqd0"),
-        )
-        .collect()
-    )
-    stats: dict[int, dict] = {}
-    inertia = 0.0
-    for r in per_cluster:
-        c = stats.setdefault(r["cluster"], {"n": 0, "sqd": 0.0, "sums": {}})
-        c["sums"][r["dim"]] = r["s"]
-        if r["dim"] == 0:
-            c["n"] = int(r["n0"])
-            c["sqd"] = float(r["sqd0"])
-            inertia += float(r["sqd0"])
-    return stats, inertia
-
-
-def kmeans_fit(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = KMEANS_K,
-    iters: int = KMEANS_ITERS,
-) -> tuple[np.ndarray, list[float]]:
-    """Lloyd's iterations; returns (centroids, per-iteration inertia).
-
-    Init is deterministic: the k lowest-vec_id embeddings. Empty clusters
-    keep their previous centroid. The returned inertia[i] is measured
-    against the centroids *entering* iteration i, so the list is
-    non-increasing for exact arithmetic (float noise aside).
-    """
-    emb = _embeddings(spark, sf_dir).persist()
-    try:
-        init = emb.orderBy("vec_id").limit(k).collect()
-        centroids = np.array([r["v"] for r in init], dtype=np.float64)
-        dim = centroids.shape[1]
-        history: list[float] = []
-        for _ in range(iters):
-            stats, inertia = _reduce_partials(
-                _assign_partials(emb, centroids)
-            )
-            history.append(inertia)
-            for j, st in stats.items():
-                centroids[j] = (
-                    np.array([st["sums"][d] for d in range(dim)]) / st["n"]
-                )
-        return centroids, history
-    finally:
-        emb.unpersist()
-
-
-def kmeans_assign(emb: DataFrame, centroids: np.ndarray) -> DataFrame:
-    """(vec_id, cluster, sqdist) for fitted centroids — one GEMM scan."""
-    C = centroids.copy()
-    c_sq = (C**2).sum(axis=1)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["v"].to_numpy())
-            d2 = (X**2).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + c_sq[None, :]
-            cl = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cluster": cl.astype("int32"),
-                    "sqdist": np.maximum(
-                        d2[np.arange(len(cl)), cl], 0.0
-                    ),
-                }
-            )
-
-    return emb.mapInPandas(gen, "vec_id long, cluster int, sqdist double")
-
-
-def kmeans_cluster_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fit k-means and summarize: one row per cluster with its population
-    and within-cluster sum of squares (inertia, rounded) — the user-facing
-    output; convergence/NumPy-agreement/purity in tests/test_clustering.py."""
-    centroids, _ = kmeans_fit(spark, sf_dir)
-    emb = _embeddings(spark, sf_dir)
-    return (
-        kmeans_assign(emb, centroids)
-        .groupBy("cluster")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.round(F.sum("sqdist"), 2).alias("inertia"),
-        )
-    )
 
 
 # --- integer-exact quantized Lloyd's (full value oracle, VERDICT r7 #7) ---
@@ -201,8 +67,9 @@ def _quantize_block(vs) -> np.ndarray:
 
 
 def _assign_partials_q(emb: DataFrame, centroids: np.ndarray) -> DataFrame:
-    """Integer twin of _assign_partials: one GEMM scan (int64, exact) ->
-    per-(batch, cluster) partials. Same O(k*d*batches) shuffle shape."""
+    """One GEMM scan (int64, exact) -> per-(batch, cluster) partials
+    (count, integer sqdist sum, per-dimension sums): an O(k*d*batches)
+    shuffle per iteration. `centroids` ships in the task closure."""
     C = centroids.astype(np.int64)
     c_sq = (C**2).sum(axis=1)
 
@@ -383,9 +250,8 @@ GROUP BY a.cluster, cks.centroid_checksum
     "sum exact integer arithmetic, so the FULL trajectory is replayed "
     "by the DuckDB oracle's unrolled CTEs (VERDICT r7 #7 — this seat "
     "moved off the invariant-flag list). Output: per-cluster exact "
-    "population, integer inertia, and centroid checksum. The float "
-    "production path (kmeans_fit/kmeans_cluster_summary) keeps its "
-    "NumPy-reference tests in tests/test_clustering.py.",
+    "population, integer inertia, and centroid checksum; convergence "
+    "and variance explained are asserted in tests/test_clustering.py.",
 )
 def ml_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids, _ = kmeans_fit_quantized(spark, sf_dir)

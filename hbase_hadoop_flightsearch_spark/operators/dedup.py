@@ -724,10 +724,9 @@ def dedup_embedding_cosine(
     """
     import numpy as np
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    emb = emb.withColumn(
+    from .similarity import _embeddings
+
+    emb = _embeddings(spark, sf_dir).withColumn(
         "blk", F.pmod(F.xxhash64("vec_id"), F.lit(m_blocks)).cast("int")
     )
     block_pairs = spark.createDataFrame(
@@ -1634,8 +1633,9 @@ def dedup_chaining_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # `dedup_embedding_cosine` above is the exact all-pairs baseline and is
 # O(n^2) by definition. This operator is its registered sub-quadratic
 # twin: random-hyperplane LSH banding generates candidate pairs only
-# inside hash buckets (the similarity module's corpus-side banding,
-# identical determinism), every candidate is verified with EXACT cosine
+# inside hash buckets (the same signature and band keys as
+# similarity_ann_lsh: `_lsh_signature` / `_band_keys`, identical
+# determinism), every candidate is verified with EXACT cosine
 # >= the same 0.4 threshold — so precision is 1.0 by construction and
 # only recall is hash-dependent. The recall audit inside the registered
 # query runs on a FIXED-COUNT sample (the EMB_DEDUP_AUDIT_K lowest
@@ -1658,190 +1658,14 @@ EMB_DEDUP_RECALL_FLOOR = 0.5  # sampled-audit floor. Measured FULL recall
 # small at test SFs.
 
 
-def embedding_ann_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    planes_n: int | None = None,
-    bands_n: int | None = None,
-) -> DataFrame:
-    """Candidate pairs from banded hyperplane LSH + exact cosine verify.
-    Returns (d1, d2, cosine) with d1 < d2, cosine >= EMB_DEDUP_THRESH.
-
-    ``planes_n``/``bands_n`` are THE density knob (r10): the registered
-    query's 12-plane/4-band default is sized for the driver fixture's
-    pair density (~0.05% of pairs at cos >= 0.4), where it prunes well.
-    On a DENSE corpus the same signature passes nearly every pair —
-    measured on the 5x altseed corpus (10% of ALL pairs genuinely
-    qualify): ~94% of candidate pairs survive banding, so the exact
-    verify becomes near-all-pairs no matter how it executes. Widening
-    the signature (more planes -> wider bands) restores pruning at the
-    price of recall at the LOW end of the threshold range — the classic
-    LSH operating-point trade; test_embedding_ann_wider_signature_
-    prunes_dense_corpus pins the knob's effect. At real corpus sizes
-    pick planes so the expected band-collision count, density x
-    collision-prob x C(n,2), stays O(true pairs)."""
-    from .similarity import (
-        LSH_BANDS,
-        LSH_PLANES,
-        _dot,
-        _hyperplanes,
-        _norm,
-    )
-
-    # Distinct local names (ADVICE r10): the old code rebound the
-    # IMPORTED constants (`LSH_PLANES, LSH_BANDS = planes_n, bands_n`),
-    # which read as mutated module globals; the knob values now live in
-    # locals that cannot be confused with the similarity-module defaults.
-    n_planes = LSH_PLANES if planes_n is None else planes_n
-    n_bands = LSH_BANDS if bands_n is None else bands_n
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    planes = _hyperplanes(n_planes, 64)
-    bits_per_band = n_planes // n_bands
-    sig = emb.withColumn(
-        "sig",
-        F.array(
-            *[
-                (
-                    _dot(
-                        F.col("v"), F.array(*[F.lit(x) for x in plane])
-                    )
-                    > 0
-                ).cast("int")
-                for plane in planes
-            ]
-        ),
-    )
-    def band_key(b: int, flip: int | None = None) -> Column:
-        bits = []
-        for i in range(bits_per_band):
-            bit = F.element_at("sig", b * bits_per_band + i + 1)
-            if flip == i:
-                bit = F.lit(1) - bit
-            bits.append(bit.cast("string"))
-        return F.concat_ws("", *bits)
-
-    # Index side: exactly ONE key per band per vector (index size is the
-    # scale cost). Probe side: the same vectors also visit every bucket
-    # within Hamming 1 of each band key (1 + bits flips), so a pair
-    # collides if ANY band differs in <= 1 bit — recall at cos 0.4
-    # (~66deg) rises ~0.54 -> ~0.9 for the cost of 4x probe-side rows
-    # only, the identical asymmetric multi-probe trade similarity_ann_lsh
-    # makes.
-    # Packed 12-bit signature int: lets the joined row decide, from the
-    # two sigs alone, which band is the pair's FIRST qualifying band
-    # (hamming <= 1 on that 3-bit segment) — the exact, SHUFFLE-FREE
-    # replacement for the old dropDuplicates pass, which re-shuffled
-    # every candidate row carrying two 64-double vectors (~0.5 KB each;
-    # the r10 5x slope scan measured that dedup exchange as the seat's
-    # scale-killer). Within one band a pair meets EXACTLY once (keys
-    # equal -> only the unflipped probe matches; hamming 1 -> only the
-    # one flip that repairs the differing bit), so duplicates arise only
-    # ACROSS bands and "band == first qualifying band" keeps each pair
-    # exactly once. Output identical; the oracle (which states the
-    # candidate SET) is untouched.
-    sigi = sig.withColumn(
-        "sigi",
-        sum(
-            (
-                F.element_at("sig", i + 1).cast("long")
-                * F.lit(1 << i).cast("long")
-            )
-            for i in range(n_planes)
-        ),
-    ).localCheckpoint(eager=True)
-    # ^ materialized ONCE: sig is 12 x 64-dim dot products per vector —
-    # without the checkpoint Catalyst inlines that expression into every
-    # exploded probe row AND into the join's first-band filter, i.e.
-    # recomputes the signature per CANDIDATE (measured 3x the whole
-    # seat at sf0.1). Same decode-once pattern as the phash scan.
-    bands = sigi.select(
-        "vec_id",
-        "v",
-        "sigi",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), band_key(b).alias("bkey")
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("vec_id", "v", "sigi", "bk.band", "bk.bkey")
-    probes = sigi.select(
-        "vec_id",
-        "v",
-        "sigi",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        band_key(b, flip).alias("bkey"),
-                    )
-                    for b in range(n_bands)
-                    for flip in [None, *range(bits_per_band)]
-                ]
-            )
-        ).alias("bk"),
-    ).select("vec_id", "v", "sigi", "bk.band", "bk.bkey")
-    # Spread the streamed side across the cluster BEFORE the join: the
-    # checkpointed corpus materializes in O(scan) partitions (ONE at
-    # bench scale), and the fused join -> first-match -> cosine pipeline
-    # inherits that parallelism — profiled 52 s single-task vs 13 s
-    # spread at sf0.1. The shuffle moves only the 16n tiny probe rows,
-    # never candidates; at 100 TB the sides are naturally wide and this
-    # repartition is the same (band, bkey) distribution the join wants.
-    probes = probes.repartition("band", "bkey")
-    a, b = probes.alias("a"), bands.alias("b")
-    mask = (1 << bits_per_band) - 1
-    first_band = "CASE " + " ".join(
-        f"WHEN bit_count((sig1 ^ sig2) >> {bits_per_band * bb} "
-        f"& {mask}) <= 1 THEN {bb}"
-        for bb in range(n_bands)
-    ) + " ELSE -1 END"
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("d1"),
-            F.col("b.vec_id").alias("d2"),
-            F.col("a.v").alias("v1"),
-            F.col("b.v").alias("v2"),
-            F.col("a.sigi").alias("sig1"),
-            F.col("b.sigi").alias("sig2"),
-            F.col("a.band").alias("band"),
-        )
-        .filter(F.col("band") == F.expr(first_band))
-    )
-    return (
-        cands.withColumn(
-            "cosine",
-            _dot(F.col("v1"), F.col("v2"))
-            / (_norm(F.col("v1")) * _norm(F.col("v2"))),
-        )
-        .filter(F.col("cosine") >= EMB_DEDUP_THRESH)
-        .select("d1", "d2", F.round("cosine", 6).alias("cosine"))
-    )
-
-
 def embedding_ann_audit_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-count recall-audit sample: the EMB_DEDUP_AUDIT_K lowest
     vec_ids, so the exact-cosine ground truth built over it is O(K^2)
     constant regardless of corpus size."""
-    return (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .orderBy("vec_id")
-        .limit(EMB_DEDUP_AUDIT_K)
-    )
+    from .similarity import _embeddings
+
+    emb = _embeddings(spark, sf_dir)
+    return emb.orderBy("vec_id").limit(EMB_DEDUP_AUDIT_K)
 
 
 def _embedding_ann_oracle() -> str:
@@ -1920,8 +1744,131 @@ FROM scored WHERE cos >= {EMB_DEDUP_THRESH}
     "full recall measured there: 1.0 / 1.0 / 0.987 at "
     "sf0.001/0.01/0.1 (0.999 alternate-seed).",
 )
-def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return embedding_ann_pairs(spark, sf_dir)
+def embedding_ann_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    planes_n: int | None = None,
+    bands_n: int | None = None,
+) -> DataFrame:
+    """Candidate pairs from banded hyperplane LSH + exact cosine verify.
+    Returns (d1, d2, cosine) with d1 < d2, cosine >= EMB_DEDUP_THRESH.
+
+    ``planes_n``/``bands_n`` are THE density knob (r10): the registered
+    query's 12-plane/4-band default is sized for the driver fixture's
+    pair density (~0.05% of pairs at cos >= 0.4), where it prunes well.
+    On a DENSE corpus the same signature passes nearly every pair —
+    measured on the 5x altseed corpus (10% of ALL pairs genuinely
+    qualify): ~94% of candidate pairs survive banding, so the exact
+    verify becomes near-all-pairs no matter how it executes. Widening
+    the signature (more planes -> wider bands) restores pruning at the
+    price of recall at the LOW end of the threshold range — the classic
+    LSH operating-point trade; test_embedding_ann_wider_signature_
+    prunes_dense_corpus pins the knob's effect. At real corpus sizes
+    pick planes so the expected band-collision count, density x
+    collision-prob x C(n,2), stays O(true pairs)."""
+    from .similarity import (
+        LSH_BANDS,
+        LSH_PLANES,
+        _band_keys,
+        _cosine,
+        _embeddings,
+        _hyperplanes,
+        _lsh_signature,
+    )
+
+    # Distinct local names (ADVICE r10): the old code rebound the
+    # IMPORTED constants (`LSH_PLANES, LSH_BANDS = planes_n, bands_n`),
+    # which read as mutated module globals; the knob values now live in
+    # locals that cannot be confused with the similarity-module defaults.
+    n_planes = LSH_PLANES if planes_n is None else planes_n
+    n_bands = LSH_BANDS if bands_n is None else bands_n
+    bits_per_band = n_planes // n_bands
+    sig = _embeddings(spark, sf_dir).withColumn(
+        "sig", _lsh_signature(F.col("v"), _hyperplanes(n_planes, 64))
+    )
+
+    # Index side: exactly ONE key per band per vector (index size is the
+    # scale cost). Probe side: the same vectors also visit every bucket
+    # within Hamming 1 of each band key (1 + bits flips), so a pair
+    # collides if ANY band differs in <= 1 bit — recall at cos 0.4
+    # (~66deg) rises ~0.54 -> ~0.9 for the cost of 4x probe-side rows
+    # only, the identical asymmetric multi-probe trade similarity_ann_lsh
+    # makes.
+    # Packed 12-bit signature int: lets the joined row decide, from the
+    # two sigs alone, which band is the pair's FIRST qualifying band
+    # (hamming <= 1 on that 3-bit segment) — the exact, SHUFFLE-FREE
+    # replacement for the old dropDuplicates pass, which re-shuffled
+    # every candidate row carrying two 64-double vectors (~0.5 KB each;
+    # the r10 5x slope scan measured that dedup exchange as the seat's
+    # scale-killer). Within one band a pair meets EXACTLY once (keys
+    # equal -> only the unflipped probe matches; hamming 1 -> only the
+    # one flip that repairs the differing bit), so duplicates arise only
+    # ACROSS bands and "band == first qualifying band" keeps each pair
+    # exactly once. Output identical; the oracle (which states the
+    # candidate SET) is untouched.
+    sigi = sig.withColumn(
+        "sigi",
+        sum(
+            (
+                F.element_at("sig", i + 1).cast("long")
+                * F.lit(1 << i).cast("long")
+            )
+            for i in range(n_planes)
+        ),
+    ).localCheckpoint(eager=True)
+    # ^ materialized ONCE: sig is 12 x 64-dim dot products per vector —
+    # without the checkpoint Catalyst inlines that expression into every
+    # exploded probe row AND into the join's first-band filter, i.e.
+    # recomputes the signature per CANDIDATE (measured 3x the whole
+    # seat at sf0.1). Same decode-once pattern as the phash scan.
+    corpus_keys = _band_keys(n_bands, bits_per_band, [None])
+    bands = sigi.select(
+        "vec_id", "v", "sigi", F.explode(F.array(*corpus_keys)).alias("bk")
+    ).select("vec_id", "v", "sigi", "bk.band", "bk.bkey")
+    probe_keys = _band_keys(
+        n_bands, bits_per_band, [None, *range(bits_per_band)]
+    )
+    probes = sigi.select(
+        "vec_id", "v", "sigi", F.explode(F.array(*probe_keys)).alias("bk")
+    ).select("vec_id", "v", "sigi", "bk.band", "bk.bkey")
+    # Spread the streamed side across the cluster BEFORE the join: the
+    # checkpointed corpus materializes in O(scan) partitions (ONE at
+    # bench scale), and the fused join -> first-match -> cosine pipeline
+    # inherits that parallelism — profiled 52 s single-task vs 13 s
+    # spread at sf0.1. The shuffle moves only the 16n tiny probe rows,
+    # never candidates; at 100 TB the sides are naturally wide and this
+    # repartition is the same (band, bkey) distribution the join wants.
+    probes = probes.repartition("band", "bkey")
+    a, b = probes.alias("a"), bands.alias("b")
+    mask = (1 << bits_per_band) - 1
+    first_band = "CASE " + " ".join(
+        f"WHEN bit_count((sig1 ^ sig2) >> {bits_per_band * bb} "
+        f"& {mask}) <= 1 THEN {bb}"
+        for bb in range(n_bands)
+    ) + " ELSE -1 END"
+    cands = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bkey") == F.col("b.bkey"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
+        )
+        .select(
+            F.col("a.vec_id").alias("d1"),
+            F.col("b.vec_id").alias("d2"),
+            F.col("a.v").alias("v1"),
+            F.col("b.v").alias("v2"),
+            F.col("a.sigi").alias("sig1"),
+            F.col("b.sigi").alias("sig2"),
+            F.col("a.band").alias("band"),
+        )
+        .filter(F.col("band") == F.expr(first_band))
+    )
+    return (
+        cands.withColumn("cosine", _cosine(F.col("v1"), F.col("v2")))
+        .filter(F.col("cosine") >= EMB_DEDUP_THRESH)
+        .select("d1", "d2", F.round("cosine", 6).alias("cosine"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2069,12 +2016,10 @@ def _semdedup_greedy_guard_check(vecs, cell_id: int):
     Returns the (n, 1) norm column for normalization."""
     import numpy as np
 
+    from .similarity import _seq_sum
+
     sq = np.asarray(vecs, dtype=np.float64)
-    sq = sq * sq
-    acc = np.zeros(sq.shape[0], dtype=np.float64)
-    for j in range(sq.shape[1]):  # strict left fold over dims
-        acc = acc + sq[:, j]
-    nrm = np.sqrt(acc)[:, None]
+    nrm = np.sqrt(_seq_sum(sq * sq))[:, None]
     if not (nrm > 0.0).all():
         raise ValueError(
             f"semdedup: zero-norm embedding(s) in cell {cell_id} — "
@@ -2094,38 +2039,17 @@ def semdedup_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from .similarity import _dot, _ivf_centroids, _norm
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cents = _ivf_centroids(spark, emb)
-    from pyspark.sql import Window
-
-    scored = emb.join(F.broadcast(cents)).withColumn(
-        "cdist",
-        _dot(F.col("v"), F.col("cv"))
-        / (_norm(F.col("v")) * _norm(F.col("cv"))),
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("cdist"), F.asc("cent_id")
-    )
-    assigned = (
-        scored.withColumn("crn", F.row_number().over(w))
-        .filter(F.col("crn") == 1)
-        .select("vec_id", "v", F.col("cent_id").alias("cell_id"))
+    from .similarity import (
+        _embeddings,
+        _ivf_centroids,
+        _nearest_cells,
+        _seq_sum,
     )
 
-    def _seq_sum_rows(x: "np.ndarray") -> "np.ndarray":
-        # strict 0.0-seeded left fold over the dim axis via an explicit
-        # loop (not np.cumsum — its sequential accumulation is a numpy
-        # internal, not an API guarantee; ADVICE r9). Elementwise adds
-        # over the row axis never reassociate, so this is bit-identical
-        # to DuckDB list_reduce per row.
-        acc = np.zeros(x.shape[:-1], dtype=np.float64)
-        for j in range(x.shape[-1]):
-            acc = acc + x[..., j]
-        return acc
+    emb = _embeddings(spark, sf_dir)
+    assigned = _nearest_cells(
+        emb, _ivf_centroids(spark, emb), "vec_id", "v", 1
+    ).select("vec_id", "v", F.col("cent_id").alias("cell_id"))
 
     def _greedy(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
@@ -2142,9 +2066,7 @@ def semdedup_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = []
         for i in range(len(pdf)):
             if kept_rows:
-                cos = _seq_sum_rows(
-                    vecs[kept_rows] * vecs[i][None, :]
-                )
+                cos = _seq_sum(vecs[kept_rows] * vecs[i][None, :])
                 j = int(cos.argmax())
                 if cos[j] >= SEMDEDUP_TAU:
                     out.append(

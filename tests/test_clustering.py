@@ -1,6 +1,6 @@
-"""K-means contracts: convergence, exact agreement with a pure-NumPy
-reference of the same algorithm, and label recovery on the synthetic
-embeddings (which are generated as per-label clusters)."""
+"""K-means contracts for the registered quantized Lloyd's: exact agreement
+with a sequential NumPy replay of the same integer algorithm, monotone
+integer inertia, and variance explained on the synthetic embeddings."""
 
 from __future__ import annotations
 
@@ -9,53 +9,48 @@ import numpy as np
 from hbase_hadoop_flightsearch_spark.operators.clustering import (
     KMEANS_ITERS,
     KMEANS_K,
-    kmeans_assign,
-    kmeans_fit,
+    KMEANS_Q,
+    _kmeans_assign_q,
+    kmeans_fit_quantized,
 )
 from hbase_hadoop_flightsearch_spark.operators.similarity import _embeddings
 
 SF = "/root/testdata/sf0.01"
 
 
-def _numpy_reference(X: np.ndarray, k: int, iters: int) -> tuple:
-    """Same algorithm, single process: k lowest-id init, argmin (first-min
-    tie-break), empty clusters keep their centroid."""
-    C = X[:k].astype(np.float64).copy()
+def _numpy_reference(Xq: np.ndarray, k: int, iters: int) -> tuple:
+    """Same integer algorithm, single process: k lowest-id init, argmin
+    (first-min tie-break), floored integer means, empty clusters keep
+    their centroid. Returns (centroids, per-iteration inertia)."""
+    C = Xq[:k].copy()
     history = []
     for _ in range(iters):
-        d2 = (
-            (X**2).sum(axis=1)[:, None]
-            - 2.0 * (X @ C.T)
-            + (C**2).sum(axis=1)[None, :]
-        )
+        d2 = ((Xq[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
         cl = d2.argmin(axis=1)
-        history.append(float(np.maximum(d2[np.arange(len(cl)), cl], 0.0).sum()))
+        history.append(int(d2[np.arange(len(cl)), cl].sum()))
         for j in range(k):
             if (cl == j).any():
-                C[j] = X[cl == j].mean(axis=0)
-    return C, history, cl
+                C[j] = Xq[cl == j].sum(axis=0) // (cl == j).sum()
+    return C, history
 
 
-def _corpus(spark):
-    rows = (
-        _embeddings(spark, SF).orderBy("vec_id").collect()
-    )
-    return np.array([r["v"] for r in rows], dtype=np.float64), [
-        r["vec_id"] for r in rows
-    ]
+def _quantized_corpus(spark) -> np.ndarray:
+    rows = _embeddings(spark, SF).orderBy("vec_id").collect()
+    X = np.array([r["v"] for r in rows], dtype=np.float64)
+    return np.floor(X * KMEANS_Q).astype(np.int64)
 
 
 def test_kmeans_matches_numpy_reference_and_converges(spark):
-    centroids, history = kmeans_fit(spark, SF)
-    X, _ = _corpus(spark)
-    C_ref, h_ref, _ = _numpy_reference(X, KMEANS_K, KMEANS_ITERS)
-    # Distributed float summation reorders adds — allclose, not equality.
-    assert np.allclose(centroids, C_ref, rtol=1e-8, atol=1e-8)
-    assert np.allclose(history, h_ref, rtol=1e-8)
-    # Lloyd's is monotone (tolerance for cross-partition float noise).
-    for a, b in zip(history, history[1:]):
-        assert b <= a * (1 + 1e-12)
-    assert history[-1] < history[0]  # it actually improved
+    centroids, history = kmeans_fit_quantized(spark, SF)
+    C_ref, h_ref = _numpy_reference(
+        _quantized_corpus(spark), KMEANS_K, KMEANS_ITERS
+    )
+    # Integer arithmetic end to end: the distributed fit IS the replay.
+    assert np.array_equal(centroids, C_ref)
+    assert history == h_ref
+    # The integer inertia never increases, and it actually improves.
+    assert all(b <= a for a, b in zip(history, history[1:])), history
+    assert history[-1] < history[0]
 
 
 def test_kmeans_explains_variance(spark):
@@ -64,46 +59,25 @@ def test_kmeans_explains_variance(spark):
     # are both ~2.0), so label recovery is not a valid oracle. What k-means
     # must still do on any data: beat the single-centroid baseline (total
     # sum of squares around the global mean) and use all k clusters.
-    centroids, history = kmeans_fit(spark, SF)
-    X, _ = _corpus(spark)
-    tss = float(((X - X.mean(axis=0)) ** 2).sum())
-    assert history[-1] < 0.95 * tss, (history[-1], tss)
-    assigned = kmeans_assign(_embeddings(spark, SF), centroids).toPandas()
+    centroids, _ = kmeans_fit_quantized(spark, SF)
+    Xq = _quantized_corpus(spark)
+    tss = float(((Xq - Xq.mean(axis=0)) ** 2).sum())
+    assigned = _kmeans_assign_q(_embeddings(spark, SF), centroids).toPandas()
+    final = int(assigned["d2"].sum())
+    assert final < 0.95 * tss, (final, tss)
     sizes = assigned.groupby("cluster").size()
-    assert len(sizes) == KMEANS_K and sizes.sum() == len(X)
+    assert len(sizes) == KMEANS_K and sizes.sum() == len(Xq)
     assert (sizes > 0).all()
-
-
-def test_kmeans_cluster_summary(spark):
-    from hbase_hadoop_flightsearch_spark.operators.clustering import (
-        kmeans_cluster_summary,
-    )
-
-    pdf = kmeans_cluster_summary(spark, SF).toPandas()
-    assert set(pdf.columns) == {"cluster", "n_points", "inertia"}
-    assert pdf["n_points"].sum() == 500  # every vector assigned once
-    assert (pdf["inertia"] >= 0).all()
 
 
 def test_kmeans_quantized_matches_sequential_numpy(spark):
     """The registered ml_kmeans_clusters (quantized Lloyd's) must agree
     EXACTLY with a sequential NumPy replay of the same integer algorithm
     — populations, integer inertia, and centroid checksums."""
-    from hbase_hadoop_flightsearch_spark.operators.clustering import (
-        KMEANS_ITERS,
-        KMEANS_Q,
-    )
     from hbase_hadoop_flightsearch_spark.plans.registry import load_all
 
-    X, _ = _corpus(spark)
-    Xq = np.floor(X * KMEANS_Q).astype(np.int64)
-    C = Xq[:KMEANS_K].copy()  # lowest vec_ids = first rows (sorted)
-    for _ in range(KMEANS_ITERS):
-        d2 = ((Xq[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        cl = d2.argmin(axis=1)
-        for j in range(KMEANS_K):
-            if (cl == j).any():
-                C[j] = Xq[cl == j].sum(axis=0) // (cl == j).sum()
+    Xq = _quantized_corpus(spark)
+    C, _ = _numpy_reference(Xq, KMEANS_K, KMEANS_ITERS)
     d2 = ((Xq[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
     cl = d2.argmin(axis=1)
     want = {
@@ -125,7 +99,7 @@ def test_kmeans_quantized_matches_sequential_numpy(spark):
         for r in pdf.itertuples()
     }
     assert got == want
-    assert sum(v[0] for v in got.values()) == len(X)
+    assert sum(v[0] for v in got.values()) == len(Xq)
 
 
 def test_pca_gram_matches_numpy_and_eigsolve_is_exact(spark, sf_correctness):

@@ -453,8 +453,8 @@ def test_embedding_ann_audit_sample_is_count_bounded(spark, sf_smoke):
     (VERDICT r6 #2 — the old %3 modulo subsample grew as (n/3)^2)."""
     from hbase_hadoop_flightsearch_spark.operators.dedup import (
         EMB_DEDUP_AUDIT_K,
-        dedup_embedding_ann,
         embedding_ann_audit_sample,
+        embedding_ann_pairs,
     )
 
     sample = embedding_ann_audit_sample(spark, sf_smoke)
@@ -468,13 +468,10 @@ def test_embedding_ann_audit_sample_is_count_bounded(spark, sf_smoke):
         EMB_DEDUP_RECALL_FLOOR,
         EMB_DEDUP_THRESH,
     )
-    from hbase_hadoop_flightsearch_spark.operators.similarity import (
-        _dot,
-        _norm,
-    )
+    from hbase_hadoop_flightsearch_spark.operators.similarity import _cosine
     from pyspark.sql import functions as F
 
-    rows = dedup_embedding_ann(spark, sf_smoke).collect()
+    rows = embedding_ann_pairs(spark, sf_smoke).collect()
     assert rows, "no pairs found"
     assert all(r.d1 < r.d2 for r in rows)
     assert all(r.cosine >= EMB_DEDUP_THRESH for r in rows)
@@ -483,11 +480,7 @@ def test_embedding_ann_audit_sample_is_count_bounded(spark, sf_smoke):
     exact_sample = {
         (r["d1"], r["d2"])
         for r in a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-        .withColumn(
-            "cos",
-            _dot(F.col("a.v"), F.col("b.v"))
-            / (_norm(F.col("a.v")) * _norm(F.col("b.v"))),
-        )
+        .withColumn("cos", _cosine(F.col("a.v"), F.col("b.v")))
         .filter(F.col("cos") >= EMB_DEDUP_THRESH)
         .select(
             F.col("a.vec_id").alias("d1"), F.col("b.vec_id").alias("d2")

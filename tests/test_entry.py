@@ -58,9 +58,7 @@ def test_query_order_drains_unchecked_tail_first():
 
     # Invariant 2: family spread, scoped to whichever pool fills the slots.
     if len(unchecked) >= 50:
-        legacy = entrymod._r6_manifest_names()
-        pool = [n for n in unchecked if n in legacy] or list(unchecked)
-        n_fam = len({reg[n].fn.__module__ for n in pool})
+        n_fam = len({reg[n].fn.__module__ for n in unchecked})
         prefix_modules = {reg[n].fn.__module__ for n in prefix}
         assert len(prefix_modules) >= min(n_fam, 20), (
             f"prefix spans {len(prefix_modules)} of {n_fam} pool families"
@@ -110,9 +108,7 @@ def test_ordering_synthetic_regimes():
         unchecked = set(names[:n_unchecked])
         checked = set(names) - unchecked
         for seed in (0, 3, 8):
-            order = entrymod._ordered_queries(
-                allq, checked, set(), set(), seed
-            )
+            order = entrymod._ordered_queries(allq, checked, set(), seed)
             got = [q.name for q in order]
             assert sorted(got) == sorted(names)  # permutation, no loss
             prefix = got[:50]
@@ -144,73 +140,9 @@ def test_ordering_synthetic_failed_first():
     checked = set(names[:20]) - failed
     order = [
         q.name
-        for q in entrymod._ordered_queries(allq, checked, failed, set(), 5)
+        for q in entrymod._ordered_queries(allq, checked, failed, 5)
     ]
     assert order[: len(failed)] == sorted(failed)
-
-
-def test_ordering_synthetic_legacy_age_priority():
-    """Never-checked names present in the r6 manifest drain before
-    never-checked names added later (VERDICT r6 #1)."""
-    allq = _synthetic_pool(n_modules=3, per_module=10)
-    names = [q.name for q in allq]
-    legacy = set(names[:15])
-    order = [
-        q.name
-        for q in entrymod._ordered_queries(allq, set(), set(), legacy, 2)
-    ]
-    assert set(order[:15]) == legacy
-
-
-def test_ordering_synthetic_tiered_manifest_age():
-    """With MULTIPLE frozen manifests (r6, r7, ...), the never-checked
-    queue drains strictly by manifest age: every unchecked r6-era name
-    precedes every unchecked r7-era name, which precedes every name never
-    frozen in any manifest (round-8 generalization of VERDICT r6 #1 —
-    without it, 6 r7-tail names fell out of the 50-prefix behind newer
-    r8 additions)."""
-    allq = _synthetic_pool(n_modules=4, per_module=10)
-    names = [q.name for q in allq]
-    tier_r6 = set(names[:8])
-    tier_r7 = tier_r6 | set(names[8:25])  # manifests are cumulative
-    for seed in (0, 2, 7):
-        order = [
-            q.name
-            for q in entrymod._ordered_queries(
-                allq, set(), set(), [tier_r6, tier_r7], seed
-            )
-        ]
-        assert set(order[:8]) == tier_r6
-        assert set(order[8:25]) == tier_r7 - tier_r6
-        # Checked names still sort behind ALL unchecked, tier or not.
-        checked = set(names[:5]) | set(names[30:35])
-        order2 = [
-            q.name
-            for q in entrymod._ordered_queries(
-                allq, checked, set(), [tier_r6, tier_r7], seed
-            )
-        ]
-        unchecked_r6 = tier_r6 - checked
-        assert set(order2[: len(unchecked_r6)]) == unchecked_r6
-        first_checked = next(i for i, n in enumerate(order2) if n in checked)
-        assert first_checked == len(names) - len(checked)
-
-
-def test_r7_manifest_frozen_and_prioritized():
-    """tools/registry_names_r7.txt freezes the 293-name end-of-r7
-    registry; every unchecked r7-era name must occupy the driver prefix
-    ahead of any r8 addition so the r7 tail drains this round."""
-    tiers = entrymod._manifest_tiers()
-    assert len(tiers) >= 2
-    assert len(tiers[1]) == 293
-    assert tiers[0] <= tiers[1]  # manifests are cumulative
-    checked = entrymod._driver_checked_names()
-    unchecked_r7 = tiers[1] - checked
-    prefix = list(entrymod.queries())[: 50]
-    missing = {
-        n for n in unchecked_r7 if n not in prefix
-    } if len(unchecked_r7) <= 50 else set()
-    assert not missing, f"r7-era unchecked names outside prefix: {missing}"
 
 
 def test_failed_queries_lead_the_ordering():
@@ -241,21 +173,6 @@ def test_prefix_rotates_vs_recorded_round3():
     assert "flight_delay_report" in entrymod.queries()
 
 
-def test_frozen_manifests_are_subsets_of_live_registry():
-    """Every frozen round manifest must be a SUBSET of the live registry:
-    a renamed or deleted query would silently break the age-tiered drain
-    ordering (its manifest entry would never match), so stale names fail
-    here instead. (Equality is NOT required — later rounds add names.)"""
-    from hbase_hadoop_flightsearch_spark.plans.registry import load_all
-
-    reg = set(load_all())
-    tiers = entrymod._manifest_tiers()
-    assert tiers, "no frozen manifests found"
-    for i, tier in enumerate(tiers):
-        missing = tier - reg
-        assert not missing, f"manifest tier {i} names not in registry: {sorted(missing)[:5]}"
-
-
 def test_seen_tier_rotation_varies_with_seed():
     """VERDICT r9 #3: after the r10 drain, prefix slots fall to
     already-green names again for the first time since r6, and the
@@ -267,7 +184,7 @@ def test_seen_tier_rotation_varies_with_seed():
     names = {q.name for q in allq}
     prefixes = {}
     for seed in (10, 11):
-        order = entrymod._ordered_queries(allq, names, set(), set(), seed)
+        order = entrymod._ordered_queries(allq, names, set(), seed)
         got = [q.name for q in order]
         assert sorted(got) == sorted(q.name for q in allq)
         prefixes[seed] = got[:50]
@@ -279,9 +196,7 @@ def test_seen_tier_rotation_varies_with_seed():
     seen_sets = [
         frozenset(
             q.name
-            for q in entrymod._ordered_queries(
-                allq, names, set(), set(), seed
-            )[:50]
+            for q in entrymod._ordered_queries(allq, names, set(), seed)[:50]
         )
         for seed in range(9, 16)
     ]

@@ -583,28 +583,19 @@ def test_mmr_pool_stage_matches_knn_shape(spark):
     from hbase_hadoop_flightsearch_spark.operators.similarity import (
         MMR_POOL,
         MMR_QUERIES,
+        _all_pairs,
+        _cosine,
         _embeddings,
+        _query_set,
+        _top_n,
     )
-    from hbase_hadoop_flightsearch_spark.operators.similarity import (  # noqa
-        _dot,
-        _norm,
-    )
-    from pyspark.sql import Window
 
     emb = _embeddings(spark, SF)
-    queries = emb.filter(F.col("vec_id") < MMR_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    scored = _all_pairs(emb, _query_set(emb, MMR_QUERIES)).withColumn(
+        "cos", _cosine(F.col("qv"), F.col("v"))
     )
-    scored = emb.join(
-        F.broadcast(queries), F.col("vec_id") != F.col("query_id")
-    ).withColumn(
-        "cos", _dot(F.col("qv"), F.col("v")) / (_norm(F.col("qv")) * _norm(F.col("v")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("vec_id")
-    )
-    pool = scored.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= MMR_POOL
+    pool = _top_n(
+        scored, "query_id", [F.desc("cos"), F.asc("neighbor_id")], MMR_POOL
     )
     em = pool._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "extended"

@@ -236,20 +236,13 @@ def test_lsh_signature_cross_engine_sign_parity(spark, sf_correctness):
 
     from hbase_hadoop_flightsearch_spark.operators.similarity import (
         LSH_PLANES,
-        _dot,
         _embeddings,
         _hyperplanes,
+        _lsh_signature,
     )
 
     planes = _hyperplanes(LSH_PLANES, 64)
-    sig = F.array(
-        *[
-            (_dot(F.col("v"), F.array(*[F.lit(x) for x in p])) > 0).cast(
-                "int"
-            )
-            for p in planes
-        ]
-    )
+    sig = _lsh_signature(F.col("v"), planes)
     got = {
         r["vec_id"]: list(r["sig"])
         for r in _embeddings(spark, sf_correctness)
@@ -441,3 +434,80 @@ SELECT m, c, cw FROM {final}
         """).fetchall()
     }
     assert got == want
+
+
+# --- the shared building blocks, on tiny in-memory inputs ---------------
+
+
+def test_exact_topk_ties_bound_and_ranks(spark):
+    """_exact_topk, the one exact re-rank behind every top-k tier: equal
+    cosines rank by the lower neighbor_id, a query keeps at most KNN_K
+    rows, and rn runs 1..k."""
+    from hbase_hadoop_flightsearch_spark.operators.similarity import (
+        KNN_K,
+        _exact_topk,
+    )
+
+    assert KNN_K == 5
+    # query 0: six neighbors exactly parallel to it (cosine 1.0 whatever
+    # the length), listed out of id order, plus one at 45 degrees
+    rows = [(0, [1.0, 0.0], n, [float(n), 0.0]) for n in (9, 3, 7, 5, 1, 6)]
+    rows.append((0, [1.0, 0.0], 2, [1.0, 1.0]))
+    # query 1: only two candidates, so fewer than KNN_K rows
+    rows += [(1, [0.0, 1.0], 8, [1.0, 1.0]), (1, [0.0, 1.0], 4, [0.0, 2.0])]
+    pairs = spark.createDataFrame(
+        rows,
+        "query_id bigint, qv array<double>, neighbor_id bigint, "
+        "v array<double>",
+    )
+    got = [
+        tuple(r)
+        for r in _exact_topk(pairs).orderBy("query_id", "rn").collect()
+    ]
+    assert got == [
+        (0, 1, 1.0, 1),
+        (0, 3, 1.0, 2),
+        (0, 5, 1.0, 3),
+        (0, 6, 1.0, 4),
+        (0, 7, 1.0, 5),
+        (1, 4, 1.0, 1),
+        (1, 8, 0.707107, 2),
+    ]
+
+
+def test_nearest_cells_tie_goes_to_lowest_cent_id(spark):
+    """Two centroids at the same cosine from a vector: the home cell is
+    the lower cent_id, and a 2-cell probe returns both."""
+    from hbase_hadoop_flightsearch_spark.operators.similarity import (
+        _nearest_cells,
+    )
+
+    cents = spark.createDataFrame(
+        [(5, [1.0, 0.0]), (0, [0.0, 1.0]), (2, [4.0, 0.0])],
+        "cent_id int, cv array<double>",
+    )
+    df = spark.createDataFrame(
+        [(10, [3.0, 0.0]), (11, [0.0, 7.0])], "vec_id bigint, v array<double>"
+    )
+    home = {
+        r.vec_id: r.cent_id
+        for r in _nearest_cells(df, cents, "vec_id", "v", 1).collect()
+    }
+    assert home == {10: 2, 11: 0}
+    two = _nearest_cells(df, cents, "vec_id", "v", 2).filter("vec_id = 10")
+    assert sorted(r.cent_id for r in two.collect()) == [2, 5]
+    assert two.columns == ["vec_id", "v", "cent_id"]
+
+
+def test_lloyd_empty_cell_keeps_its_centroid():
+    """A Lloyd cell that no row picks keeps its centroid (no NaN from an
+    empty mean). Duplicate seed rows make cell 1 tie with cell 0 on every
+    row, and the tie goes to cell 0, so cell 1 stays empty."""
+    import numpy as np
+
+    from hbase_hadoop_flightsearch_spark.operators.similarity import _lloyd
+
+    mat = np.array([[2.0, 2.0], [2.0, 2.0], [8.0, 8.0], [9.0, 8.0]])
+    cents = _lloyd(mat, 3, 4)
+    assert cents.tolist() == [[2.0, 2.0], [2.0, 2.0], [8.5, 8.0]]
+    assert mat.tolist()[0] == [2.0, 2.0]  # the input is not modified

@@ -9,12 +9,20 @@ $PLAN_SUFFIX, default "before"). Planning-only: no action is executed, so
 this is safe to run on a loaded box. Plans are captured with the same
 session confs bench.py pins for its timed seats, so the captured shape is
 the benched shape.
+
+Expression ids (``#123``, ``#123L``), exchange ``plan_id=N`` numbers,
+lambda variable suffixes (``lambda x_253``) and RDD ids
+(``MapPartitionsRDD[81]``) are replaced with fixed tokens before writing:
+they depend on how many plans the session built before, so without this
+two captures of an unchanged query differ on nearly every line. With it,
+``diff -r before/ after/`` shows only real plan changes.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -23,6 +31,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bench import PINNED_CONFS  # noqa: E402
 from hbase_hadoop_flightsearch_spark.plans.registry import load_all  # noqa: E402
 from hbase_hadoop_flightsearch_spark.session import get_spark  # noqa: E402
+
+
+def normalize_plan(text: str) -> str:
+    """Replace session-dependent expression ids and plan ids with fixed
+    tokens, so plan text from two sessions compares line for line."""
+    text = re.sub(r"#\d+L?\b", "#_", text)
+    text = re.sub(r"plan_id=\d+", "plan_id=_", text)
+    text = re.sub(r"\b(lambda [A-Za-z]\w*?)_\d+\b", r"\1_", text)
+    return re.sub(r"RDD\[\d+\]", "RDD[_]", text)
 
 
 def main() -> None:
@@ -49,7 +66,7 @@ def main() -> None:
                 df.explain("formatted")
             path = os.path.join(outdir, f"{q.name}_{suffix}.txt")
             with open(path, "w") as f:
-                f.write(buf.getvalue())
+                f.write(normalize_plan(buf.getvalue()))
             print(f"wrote {path}")
         finally:
             for k in pins:
