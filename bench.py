@@ -82,6 +82,18 @@ def time_query(spark, q, sf_dir: str, runs: int) -> float:
             spark.conf.unset(k)
 
 
+def compile_counters(spark) -> tuple[int, int]:
+    """(Janino compiles, HotSpot JIT compile ms) so far in the driver JVM;
+    in local mode the executors run in it too."""
+    jvm = spark._jvm
+    return (
+        jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount(),
+        jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+        .getTotalCompilationTime(),
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     runs = int(os.environ.get("BENCH_RUNS", "3"))
@@ -114,9 +126,13 @@ def main() -> None:
     headline = [q for q in registry.values() if q.headline]
 
     # JVM / whole-stage-codegen warmup: one untimed pass of EVERY headline
-    # query, so each timed median measures the steady-state plan rather
-    # than first-run codegen/classloading (observed ~5x on the heavier
-    # queries on a cold JVM).
+    # query compiles and loads each seat's generated classes before the
+    # timed runs (a cold JVM read ~5x on the heavier queries). The timed
+    # runs reuse them only because get_spark sizes the codegen cache above
+    # the suite's distinct classes: under Spark's default of 100 entries
+    # the later seats evicted the earlier seats' classes, which were then
+    # recompiled inside their timed runs. janino_compiles and
+    # jit_compile_ms report, per seat, the compiling left in its timed runs.
     for q in headline:
         q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
@@ -135,9 +151,15 @@ def main() -> None:
         )
 
     timings: dict[str, float] = {}
+    janino_compiles: dict[str, int] = {}
+    jit_compile_ms: dict[str, int] = {}
     for q in headline:
         q_runs = max(runs, 5) if (loaded_box and q.name in PY_STAGE) else runs
+        compiles0, jit0 = compile_counters(spark)
         timings[q.name] = round(time_query(spark, q, sf_dir, q_runs), 4)
+        compiles1, jit1 = compile_counters(spark)
+        janino_compiles[q.name] = compiles1 - compiles0
+        jit_compile_ms[q.name] = jit1 - jit0
 
     total = round(sum(timings.values()), 4)
     load_after = os.getloadavg()[0]
@@ -170,6 +192,9 @@ def main() -> None:
                     "sub-second-seat adjudication rule, r15)"
                 ),
                 "subsecond_pins": SUB_SECOND_PINS,
+                # Summed over each seat's timed runs (not a median).
+                "janino_compiles": janino_compiles,
+                "jit_compile_ms": jit_compile_ms,
             }
         )
     )

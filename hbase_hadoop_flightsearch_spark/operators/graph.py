@@ -150,7 +150,10 @@ def connected_components(vertices: DataFrame, pairs: DataFrame) -> DataFrame:
         # consecutive-set-equality check, needs no prev-round state, and
         # costs ONE aggregate job per round. Soundness does not rest on a
         # checksum: the probe reads the actual degree/role structure,
-        # not a collidable signature.
+        # not a collidable signature. A plain count, with no limit: the
+        # last round scans every role anyway, and a limit's generated
+        # class names its counter after the codegen stage, so it would
+        # compile anew on every round of every call.
         roles = (
             edges.select(F.col("src").alias("v"), F.lit(1).alias("s"), F.lit(0).alias("d"))
             .unionAll(
@@ -159,13 +162,9 @@ def connected_components(vertices: DataFrame, pairs: DataFrame) -> DataFrame:
             .groupBy("v")
             .agg(F.sum("s").alias("s"), F.sum("d").alias("d"))
         )
-        not_star = (
-            roles.filter(
-                (F.col("s") > 1) | ((F.col("s") > 0) & (F.col("d") > 0))
-            )
-            .limit(1)
-            .count()
-        )
+        not_star = roles.filter(
+            (F.col("s") > 1) | ((F.col("s") > 0) & (F.col("d") > 0))
+        ).count()
         if not_star == 0:
             break
     else:

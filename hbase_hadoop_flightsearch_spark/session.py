@@ -72,6 +72,27 @@ def get_spark(
         # Quiet local runs.
         "spark.ui.enabled": "false",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        # Generated-class cache. A static conf: the JVM-wide LRU is sized
+        # at its first use, and the driver and each executor keep their
+        # own. Spark's default of 100 entries is smaller than one pass of
+        # a workload here, so a repeated pass evicted every class before
+        # its reuse: Janino recompiled (and HotSpot re-JITted) about 170
+        # classes per warm perfbench corpus_prep pass. Distinct classes
+        # per session, measured on 4 cores: 152 for perfbench corpus_prep,
+        # ~150 for reference_sql (plus 2 per ingest, as uuid() puts a
+        # random seed in the generated source), 313 for the bench.py
+        # headline suite at sf0.1. 2000 holds the largest with 6x
+        # headroom. The cost is metaspace: corpus_prep's 152 classes hold
+        # ~0.4 MB after a full GC (against a 1-entry cache), ~3 KB each,
+        # so a full cache is ~6 MB per JVM.
+        "spark.sql.codegen.cache.maxEntries": "2000",
+        # Name generated classes without the codegen stage id, so the
+        # same operator pipeline planned under another stage id (another
+        # AQE stage, loop round or query) is the same source text and
+        # hits the cache instead of compiling a renamed copy. With ids,
+        # corpus_prep compiles 180 distinct classes instead of 152, and
+        # its first warm pass still compiles a few.
+        "spark.sql.codegen.useIdInClassName": "false",
     }
     if extra_conf:
         conf.update(extra_conf)
