@@ -267,9 +267,10 @@ WHERE (1000000 * inter) // (sz_c + sz_e - inter) >= {FUZZY_DECON_TAU_PPM}
     "min-hashes banded 8x2 (candidate recall 0.90 at j=0.5, 0.995 at "
     "j=0.7 by the banding theorem) and VERIFIED by exact integer "
     "Jaccard so precision is 1.0 by construction. Plan: one grouped "
-    "16-way min for signatures, 8 band equi-joins with the SMALL eval "
-    "side broadcast (an eval suite is KBs even at 100 TB corpus "
-    "scale), exact verify only on candidates — never corpus x eval. "
+    "16-way min for signatures, one (band, key) equi-join with the "
+    "SMALL eval side broadcast (an eval suite is KBs even at 100 TB "
+    "corpus scale) that keeps each pair in its first equal band, "
+    "exact verify only on candidates — never corpus x eval. "
     "Both the banding and the verify replay value-exactly in DuckDB "
     "(md5 signatures are byte-identical), so this is a FULL value "
     "oracle unlike the xxhash production LSH tier.",
@@ -280,34 +281,27 @@ def text_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         _minhash_md5_sigs,
         doc_shingles,
     )
+    from ..operators.similarity import _banded_pairs
 
-    sigs = _minhash_md5_sigs(spark, sf_dir)
+    sigs = _minhash_md5_sigs(spark, sf_dir).select(
+        "doc_id",
+        F.array(*[F.col(f"m{i}") for i in range(MINHASH_MD5_K)]).alias("sig"),
+    )
     is_eval = F.col("doc_id") % FUZZY_DECON_MOD == 5
-    bands = [
-        F.concat(F.col(f"m{2*j}"), F.lit("|"), F.col(f"m{2*j+1}")).alias(
-            f"b{j}"
-        )
-        for j in range(FUZZY_BANDS)
-    ]
-    corpus = sigs.filter(~is_eval).select(
-        F.col("doc_id").alias("corpus_doc"), *bands
+    # Band j's key is the md5 pair "m{2j}|m{2j+1}", the pair the oracle
+    # compares; the eval side is a benchmark suite, small at any corpus
+    # scale, so it is the broadcast index.
+    cands = _banded_pairs(
+        F.broadcast(sigs.filter(is_eval)),
+        sigs.filter(~is_eval),
+        "doc_id",
+        "sig",
+        FUZZY_BANDS,
+        key=lambda s, j: F.concat_ws("|", F.slice(s, 2 * j + 1, 2)),
+    ).select(
+        F.col("doc_id1").alias("corpus_doc"),
+        F.col("doc_id2").alias("eval_doc"),
     )
-    evals = sigs.filter(is_eval).select(
-        F.col("doc_id").alias("eval_doc"), *bands
-    )
-    cand_parts = [
-        corpus.select("corpus_doc", F.col(f"b{j}").alias("bk")).join(
-            F.broadcast(
-                evals.select("eval_doc", F.col(f"b{j}").alias("bk"))
-            ),
-            "bk",
-        ).select("corpus_doc", "eval_doc")
-        for j in range(FUZZY_BANDS)
-    ]
-    cands = cand_parts[0]
-    for p in cand_parts[1:]:
-        cands = cands.unionByName(p)
-    cands = cands.distinct()
 
     sh = doc_shingles(spark, sf_dir).select(
         "doc_id", "shingles", F.size("shingles").alias("sz")

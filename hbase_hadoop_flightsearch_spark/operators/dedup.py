@@ -18,6 +18,11 @@ Scale design (the 100 TB story):
   * Verification always recomputes EXACT similarity on candidates, so LSH
     variants return the same pairs as the exact operator minus (rare)
     recall misses; at j>=0.9 the miss probability is < 4e-8.
+  * Every banded tier (MinHash, SimHash, image hash, embedding LSH, and
+    the fuzzy decontaminator) takes its candidates from one generator,
+    `similarity._banded_pairs`: one (band, key) join that keeps each
+    pair in its first colliding band, so no tier dedups candidates with
+    a shuffle.
 """
 
 from __future__ import annotations
@@ -421,6 +426,8 @@ MINHASH_NEARDUP_THRESHOLD = 0.9  # the tier where 16x4 banding recall is
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded MinHash: shuffle key space is (band, band-hash) — bounded and
     dense regardless of corpus size, unlike the raw shingle index."""
+    from .similarity import _banded_pairs
+
     sh = doc_shingles(spark, sf_dir)
     # Materialize the signatures ONCE: sig is 64 x array_min-over-
     # shingles xxhash64 expressions, and without the checkpoint Catalyst
@@ -431,35 +438,16 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = minhash_signatures(
         sh, MINHASH_BANDS * MINHASH_ROWS
     ).localCheckpoint(eager=True)
-    bands = sigs.select(
+    cand = _banded_pairs(
+        sigs,
+        sigs,
         "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.lit(b),
-                            F.slice("sig", b * MINHASH_ROWS + 1, MINHASH_ROWS),
-                        ).alias("bh"),
-                    )
-                    for b in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.bh")
-    a = bands.select(
-        F.col("doc_id").alias("d1"), F.col("band").alias("band_a"), "bh"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("d2"), F.col("band").alias("band_b"), "bh"
-    )
-    cand = (
-        a.join(b, ["bh"])
-        .filter((F.col("band_a") == F.col("band_b")) & (F.col("d1") < F.col("d2")))
-        .select("d1", "d2")
-        .distinct()
-    )
+        "sig",
+        MINHASH_BANDS,
+        key=lambda s, b: F.xxhash64(
+            F.lit(b), F.slice(s, b * MINHASH_ROWS + 1, MINHASH_ROWS)
+        ),
+    ).select(F.col("doc_id1").alias("d1"), F.col("doc_id2").alias("d2"))
     return _exact_jaccard(cand, sh, MINHASH_NEARDUP_THRESHOLD)
 
 
@@ -484,70 +472,6 @@ def _simhash_counts_col() -> Column:
     """)
 
 
-def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash: sig bit i = sign of sum over features of (+1 if feature-hash
-    bit i else -1). Features are the family's shared word 3-grams — on this
-    corpus unigram token SETS collide pathologically (~30-word vocabulary;
-    see module docstring), which concentrates set-based signatures and
-    floods the band join. Near-dups differ in few bits; blocking on 8
-    8-bit bytes is EXACT for Hamming <= 7: seven flipped bits cannot
-    touch all eight bands, so every qualifying pair shares one band."""
-    sh = doc_shingles(spark, sf_dir)
-    sig_bits = F.transform(
-        _simhash_counts_col(), lambda c: (c > 0).cast("int")
-    )
-    sigs = sh.select("doc_id", sig_bits.alias("bits"))
-
-    # blocking: 8 bands of 8 bits each, banded exactly like MinHash-LSH
-    bands = sigs.select(
-        "doc_id",
-        "bits",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(q).alias("band"),
-                        F.xxhash64(
-                            F.lit(q), F.slice("bits", q * 8 + 1, 8)
-                        ).alias("bh"),
-                    )
-                    for q in range(8)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bits", "bk.band", "bk.bh")
-    a = bands.select(
-        F.col("doc_id").alias("d1"),
-        F.col("bits").alias("bits1"),
-        F.col("band").alias("band_a"),
-        "bh",
-    )
-    b = bands.select(
-        F.col("doc_id").alias("d2"),
-        F.col("bits").alias("bits2"),
-        F.col("band").alias("band_b"),
-        "bh",
-    )
-    hamming = F.aggregate(
-        F.zip_with("bits1", "bits2", lambda x, y: (x != y).cast("int")),
-        F.lit(0),
-        lambda acc, d: acc + d,
-    )
-    return (
-        a.join(b, ["bh"])
-        .filter(
-            (F.col("band_a") == F.col("band_b")) & (F.col("d1") < F.col("d2"))
-        )
-        # Verify hamming FIRST, then dedup multi-band hits on the narrow
-        # (d1, d2, hamming) key — never shuffle the 64-element bit arrays
-        # through a distinct (hamming is a pure function of the pair).
-        .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= SIMHASH_HAMMING_MAX)
-        .select("d1", "d2", "hamming")
-        .distinct()
-    )
-
-
 def _simhash_sig_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sig bigint) — the 64 signature bits packed into one long
     (bit i = sign of the feature vote for bit i), so pair Hamming distance
@@ -562,6 +486,48 @@ def _simhash_sig_long(spark: SparkSession, sf_dir: str) -> DataFrame:
           0L, (acc, x) -> acc + IF(x.c > 0, shiftleft(1L, x.i), 0L))"""
     )
     return with_counts.select("doc_id", sig.alias("sig"))
+
+
+def _hamming_pairs(frame: DataFrame, ids: str, sig: str) -> DataFrame:
+    """(<ids>1, <ids>2, hamming) for every pair of rows of `frame` whose
+    64-bit signatures `sig` differ in at most SIMHASH_HAMMING_MAX bits.
+    Blocking on the 8 bytes of the signature is EXACT here: seven
+    flipped bits cannot touch all eight bytes, so every qualifying pair
+    shares one byte (pigeonhole), and bit_count(xor) verifies."""
+    from .similarity import _banded_pairs
+
+    pairs = _banded_pairs(
+        frame,
+        frame,
+        ids,
+        sig,
+        SIMHASH_BITS // 8,
+        key=lambda s, b: F.expr(f"CAST(({s} >> {8 * b}) & 255 AS INT)"),
+        hit=lambda s1, s2, b: F.expr(f"(({s1} ^ {s2}) >> {8 * b}) & 255 = 0"),
+    )
+    return (
+        pairs.withColumn("hamming", F.expr(f"bit_count({sig}1 ^ {sig}2)"))
+        .filter(F.col("hamming") <= SIMHASH_HAMMING_MAX)
+        .select(f"{ids}1", f"{ids}2", "hamming")
+    )
+
+
+def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash: sig bit i = sign of sum over features of (+1 if feature-hash
+    bit i else -1). Features are the family's shared word 3-grams — on this
+    corpus unigram token SETS collide pathologically (~30-word vocabulary;
+    see module docstring), which concentrates set-based signatures and
+    floods the band join. Near-dups differ in few bits, and the packed
+    signatures are banded exactly like the image hash (_hamming_pairs)."""
+    # Materialized once for both join sides. Lazy, the verify's
+    # null-intolerant bit_count(xor) makes Catalyst infer isnotnull(sig)
+    # and push the whole signature expression below the scan's exchange:
+    # four signature passes, two of them on one task (19-26 s against
+    # 8 s for the earlier array-bits plan, sf0.1 on 4 cores; 4-5 s now).
+    sigs = _simhash_sig_long(spark, sf_dir).localCheckpoint(eager=True)
+    return _hamming_pairs(sigs, "doc_id", "sig").select(
+        F.col("doc_id1").alias("d1"), F.col("doc_id2").alias("d2"), "hamming"
+    )
 
 
 _SIMHASH_ORACLE = f"""
@@ -615,74 +581,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs, so the plan survives a 100x corpus; the quadratic
     formulation lives only in the oracle."""
     return simhash_pairs(spark, sf_dir)
-
-
-def simhash_banding_theorem_check(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verification twin (TEST-ONLY, sf <= 0.01): packed-long signatures
-    make both sides cheap — banded candidates via 8-bit slices of the
-    packed sig, brute force via crossJoin + bit_count(xor). The crossJoin
-    is the POINT here (exact ground truth that the 8x8-bit banding finds
-    ALL Hamming <= 7 pairs and nothing else); it is deliberately NOT a
-    registry entry because an all-pairs plan dies at 100x scale — the
-    production path is the banded `simhash_pairs`."""
-    sigs = _simhash_sig_long(spark, sf_dir)
-    band_val = lambda q: F.shiftrightunsigned("sig", q * 8).bitwiseAND(  # noqa: E731
-        0xFF
-    )
-    bands = sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(q).alias("band"), band_val(q).alias("bv"))
-                    for q in range(8)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "sig", "bk.band", "bk.bv")
-    hamm = F.bit_count(F.col("s1").bitwiseXOR(F.col("s2")))
-    banded = (
-        bands.alias("a")
-        .join(
-            bands.select(
-                F.col("doc_id").alias("d2"),
-                F.col("sig").alias("s2"),
-                "band",
-                "bv",
-            ),
-            ["band", "bv"],
-        )
-        .select(
-            F.col("doc_id").alias("d1"),
-            F.col("sig").alias("s1"),
-            "d2",
-            "s2",
-        )
-        .filter(F.col("d1") < F.col("d2"))
-        .filter(hamm <= SIMHASH_HAMMING_MAX)
-        .select("d1", "d2")
-        .distinct()
-    )
-    brute = (
-        sigs.select(F.col("doc_id").alias("d1"), F.col("sig").alias("s1"))
-        .crossJoin(
-            sigs.select(F.col("doc_id").alias("d2"), F.col("sig").alias("s2"))
-        )
-        .filter(F.col("d1") < F.col("d2"))
-        .filter(hamm <= SIMHASH_HAMMING_MAX)
-        .select("d1", "d2")
-    )
-    missing = brute.exceptAll(banded).agg(
-        F.count(F.lit(1)).alias("n_missing")
-    )
-    extra = banded.exceptAll(brute).agg(F.count(F.lit(1)).alias("n_extra"))
-    return missing.crossJoin(extra).select(
-        (F.col("n_missing") == 0).alias("banding_complete"),
-        (F.col("n_extra") == 0).alias("banding_sound"),
-    )
 
 
 @register(
@@ -1245,7 +1143,7 @@ def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PHASH_GRID = 8  # 8x8 sample grid -> 64-bit hash
 PHASH_BANDS = 8  # 8 bands x 8 bits: pigeonhole-lossless for hamming <= 7
-PHASH_HAM_T = 7  # max hamming distance for a near-dup pair
+PHASH_HAM_T = SIMHASH_HAMMING_MAX  # the same 64-bit banding: _hamming_pairs
 
 
 def _ahash_from_pixels(px) -> int:
@@ -1366,7 +1264,8 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
       3. duplicate candidates are eliminated by the FIRST-EQUAL-BAND
          rule — keep the join row only where band = the lowest b with
          byte b of (h1 XOR h2) zero — an exact, shuffle-free dedup
-         (no .distinct() anywhere);
+         (no .distinct() anywhere; `_hamming_pairs`, shared with
+         SimHash);
       4. the hamming filter runs on hash pairs BEFORE any doc-level
          work, so only qualifying pairs (124k of 2.7M) expand;
       5. two output-sized joins fan qualifying hash pairs back out to
@@ -1391,44 +1290,8 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         _phash_batches, schema="doc_id bigint, ahash bigint"
     ).localCheckpoint(eager=True)  # decode scan runs once, feeds all stages
     uniq = hashes.groupBy("ahash").agg(F.count(F.lit(1)).alias("mult"))
-    ubands = uniq.select(
-        "ahash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.expr(
-                            f"CAST((ahash >> {8 * b}) & 255 AS INT)"
-                        ).alias("val"),
-                    )
-                    for b in range(PHASH_BANDS)
-                ]
-            )
-        ).alias("bv"),
-    ).select("ahash", "bv.band", "bv.val")
-    a = ubands.alias("a")
-    b = ubands.alias("b")
-    first_eq = "CASE " + " ".join(
-        f"WHEN ((h1 ^ h2) >> {8 * bb}) & 255 = 0 THEN {bb}"
-        for bb in range(PHASH_BANDS)
-    ) + " ELSE -1 END"
-    pairs_h = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.ahash") < F.col("b.ahash")),
-        )
-        .select(
-            F.col("a.ahash").alias("h1"),
-            F.col("b.ahash").alias("h2"),
-            F.col("a.band").alias("band"),
-        )
-        .filter(F.col("band") == F.expr(first_eq))  # exact pair dedup
-        .withColumn("hamming", F.bit_count(F.expr("h1 ^ h2")).cast("int"))
-        .filter(F.col("hamming") <= PHASH_HAM_T)
-        .select("h1", "h2", "hamming")
+    pairs_h = _hamming_pairs(uniq.select("ahash"), "ahash", "ahash").select(
+        F.col("ahash1").alias("h1"), F.col("ahash2").alias("h2"), "hamming"
     )
     cross = (
         pairs_h.join(
@@ -1634,7 +1497,7 @@ def dedup_chaining_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # O(n^2) by definition. This operator is its registered sub-quadratic
 # twin: random-hyperplane LSH banding generates candidate pairs only
 # inside hash buckets (the same signature and band keys as
-# similarity_ann_lsh: `_lsh_signature` / `_band_keys`, identical
+# similarity_ann_lsh: `_lsh_sigs` / `_lsh_pairs`, identical
 # determinism), every candidate is verified with EXACT cosine
 # >= the same 0.4 threshold — so precision is 1.0 by construction and
 # only recall is hash-dependent. The recall audit inside the registered
@@ -1769,105 +1632,49 @@ def embedding_ann_pairs(
     from .similarity import (
         LSH_BANDS,
         LSH_PLANES,
-        _band_keys,
         _cosine,
         _embeddings,
-        _hyperplanes,
-        _lsh_signature,
+        _lsh_pairs,
+        _lsh_sigs,
     )
 
-    # Distinct local names (ADVICE r10): the old code rebound the
-    # IMPORTED constants (`LSH_PLANES, LSH_BANDS = planes_n, bands_n`),
-    # which read as mutated module globals; the knob values now live in
-    # locals that cannot be confused with the similarity-module defaults.
     n_planes = LSH_PLANES if planes_n is None else planes_n
     n_bands = LSH_BANDS if bands_n is None else bands_n
-    bits_per_band = n_planes // n_bands
-    sig = _embeddings(spark, sf_dir).withColumn(
-        "sig", _lsh_signature(F.col("v"), _hyperplanes(n_planes, 64))
-    )
-
-    # Index side: exactly ONE key per band per vector (index size is the
-    # scale cost). Probe side: the same vectors also visit every bucket
-    # within Hamming 1 of each band key (1 + bits flips), so a pair
-    # collides if ANY band differs in <= 1 bit — recall at cos 0.4
-    # (~66deg) rises ~0.54 -> ~0.9 for the cost of 4x probe-side rows
-    # only, the identical asymmetric multi-probe trade similarity_ann_lsh
-    # makes.
-    # Packed 12-bit signature int: lets the joined row decide, from the
-    # two sigs alone, which band is the pair's FIRST qualifying band
-    # (hamming <= 1 on that 3-bit segment) — the exact, SHUFFLE-FREE
-    # replacement for the old dropDuplicates pass, which re-shuffled
-    # every candidate row carrying two 64-double vectors (~0.5 KB each;
-    # the r10 5x slope scan measured that dedup exchange as the seat's
-    # scale-killer). Within one band a pair meets EXACTLY once (keys
-    # equal -> only the unflipped probe matches; hamming 1 -> only the
-    # one flip that repairs the differing bit), so duplicates arise only
-    # ACROSS bands and "band == first qualifying band" keeps each pair
-    # exactly once. Output identical; the oracle (which states the
-    # candidate SET) is untouched.
-    sigi = sig.withColumn(
-        "sigi",
-        sum(
-            (
-                F.element_at("sig", i + 1).cast("long")
-                * F.lit(1 << i).cast("long")
-            )
-            for i in range(n_planes)
-        ),
+    # Checked before any job runs. A band of 0 bits keys every vector
+    # alike (a silent all-pairs cosine), a remainder silently drops
+    # planes, and the packed signature holds at most 63 sign bits.
+    if not 1 <= n_bands <= n_planes:
+        raise ValueError(
+            f"bands_n={n_bands} must be between 1 and planes_n={n_planes}"
+        )
+    if n_planes % n_bands:
+        raise ValueError(
+            f"planes_n={n_planes} must be a multiple of bands_n={n_bands}"
+        )
+    if n_planes >= 64:
+        raise ValueError(f"planes_n={n_planes} must be below 64")
+    # The signatures are materialized ONCE: each is n_planes 64-dim dot
+    # products, and without the checkpoint Catalyst inlines that
+    # expression into every exploded probe row, i.e. recomputes the
+    # signature per CANDIDATE (measured 3x the whole seat at sf0.1).
+    # Spread over the shuffle width first (a fixed count, so AQE cannot
+    # coalesce the small corpus back into one partition): the corpus scan
+    # can be one partition, and the probe side, the join and the verify
+    # inherit it (the same spread on the probe rows was profiled 52 s
+    # single-task vs 13 s spread at sf0.1).
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    sig = _lsh_sigs(
+        _embeddings(spark, sf_dir).repartition(width, "vec_id"), n_planes
     ).localCheckpoint(eager=True)
-    # ^ materialized ONCE: sig is 12 x 64-dim dot products per vector —
-    # without the checkpoint Catalyst inlines that expression into every
-    # exploded probe row AND into the join's first-band filter, i.e.
-    # recomputes the signature per CANDIDATE (measured 3x the whole
-    # seat at sf0.1). Same decode-once pattern as the phash scan.
-    corpus_keys = _band_keys(n_bands, bits_per_band, [None])
-    bands = sigi.select(
-        "vec_id", "v", "sigi", F.explode(F.array(*corpus_keys)).alias("bk")
-    ).select("vec_id", "v", "sigi", "bk.band", "bk.bkey")
-    probe_keys = _band_keys(
-        n_bands, bits_per_band, [None, *range(bits_per_band)]
-    )
-    probes = sigi.select(
-        "vec_id", "v", "sigi", F.explode(F.array(*probe_keys)).alias("bk")
-    ).select("vec_id", "v", "sigi", "bk.band", "bk.bkey")
-    # Spread the streamed side across the cluster BEFORE the join: the
-    # checkpointed corpus materializes in O(scan) partitions (ONE at
-    # bench scale), and the fused join -> first-match -> cosine pipeline
-    # inherits that parallelism — profiled 52 s single-task vs 13 s
-    # spread at sf0.1. The shuffle moves only the 16n tiny probe rows,
-    # never candidates; at 100 TB the sides are naturally wide and this
-    # repartition is the same (band, bkey) distribution the join wants.
-    probes = probes.repartition("band", "bkey")
-    a, b = probes.alias("a"), bands.alias("b")
-    mask = (1 << bits_per_band) - 1
-    first_band = "CASE " + " ".join(
-        f"WHEN bit_count((sig1 ^ sig2) >> {bits_per_band * bb} "
-        f"& {mask}) <= 1 THEN {bb}"
-        for bb in range(n_bands)
-    ) + " ELSE -1 END"
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("d1"),
-            F.col("b.vec_id").alias("d2"),
-            F.col("a.v").alias("v1"),
-            F.col("b.v").alias("v2"),
-            F.col("a.sigi").alias("sig1"),
-            F.col("b.sigi").alias("sig2"),
-            F.col("a.band").alias("band"),
-        )
-        .filter(F.col("band") == F.expr(first_band))
-    )
     return (
-        cands.withColumn("cosine", _cosine(F.col("v1"), F.col("v2")))
+        _lsh_pairs(sig, sig, n_bands, n_planes // n_bands)
+        .withColumn("cosine", _cosine(F.col("v1"), F.col("v2")))
         .filter(F.col("cosine") >= EMB_DEDUP_THRESH)
-        .select("d1", "d2", F.round("cosine", 6).alias("cosine"))
+        .select(
+            F.col("vec_id1").alias("d1"),
+            F.col("vec_id2").alias("d2"),
+            F.round("cosine", 6).alias("cosine"),
+        )
     )
 
 

@@ -11,7 +11,9 @@ Every top-k query here is the same skeleton:
         pool, the RRF semantic arm and the hard-negative pool cut their
         own depths of the same exact cosines with `_top_n`;
       - LSH buckets (`similarity_ann_lsh`): banded random-hyperplane sign
-        keys with query-side multi-probe;
+        keys with query-side multi-probe (`_lsh_pairs` over
+        `_banded_pairs`, the one banded-candidate join that the dedup
+        family's MinHash, SimHash and image-hash tiers share);
       - IVF cells (`similarity_ann_ivf`): the IVF_NPROBE nearest trained
         coarse cells (`_nearest_cells`);
       - an ADC shortlist (`similarity_ann_pq`, `similarity_ann_ivfpq`):
@@ -35,6 +37,8 @@ float->double BEFORE arithmetic so Spark and DuckDB accumulate identically.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -248,28 +252,110 @@ def _lsh_signature(v: Column, planes: list[list[float]]) -> Column:
     )
 
 
-def _band_keys(n_bands: int, bits_per_band: int, flips: list) -> list:
-    """struct(band, bkey) columns over the `sig` column: for each band
-    and each entry of `flips`, the band's bits as a bit-string with bit
-    `flip` inverted (None inverts nothing). [None] gives the one corpus
-    key per band; [None, 0, .., bits_per_band - 1] adds the Hamming-1
-    multi-probe keys."""
-    keys = []
-    for b in range(n_bands):
-        for flip in flips:
-            bits = []
-            for i in range(bits_per_band):
-                bit = F.element_at("sig", b * bits_per_band + i + 1)
-                if flip == i:
-                    bit = F.lit(1) - bit
-                bits.append(bit.cast("string"))
-            keys.append(
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws("", *bits).alias("bkey"),
-                )
-            )
-    return keys
+def _lsh_sigs(emb: DataFrame, n_planes: int) -> DataFrame:
+    """(vec_id, v, sig): the n_planes sign bits of `_lsh_signature`
+    packed into one bigint, bit p from plane p, so a band's bits are a
+    shift and a mask and their Hamming distance is one bit_count. Needs
+    n_planes < 64."""
+    bits = emb.withColumn(
+        "bits", _lsh_signature(F.col("v"), _hyperplanes(n_planes, 64))
+    )
+    packed = [
+        F.shiftleft(F.element_at("bits", p + 1).cast("long"), p)
+        for p in range(n_planes)
+    ]
+    return bits.select("vec_id", "v", sum(packed[1:], packed[0]).alias("sig"))
+
+
+def _banded_pairs(
+    index: DataFrame,
+    probe: DataFrame,
+    ids: str,
+    sig: str,
+    n_bands: int,
+    key: Callable[[str, int], Column],
+    probe_keys: Callable[[str, int], list[Column]] | None = None,
+    hit: Callable[[str, str, int], Column] | None = None,
+) -> DataFrame:
+    """Banded candidate pairs, the filter half of every filter-then-verify
+    near-neighbor join here; each caller verifies exactly after.
+
+    Every `index` row gets one key per band, `key(sig, b)`, built from
+    its signature column named `sig`; every `probe` row gets the keys
+    `probe_keys(sig, b)` (default: that same key). A probe and an index
+    row MEET in band b when a probe key equals the index key there; one
+    join on (band, key) finds every meeting. `hit(sig + "1", sig + "2",
+    b)` must hold exactly when the pair meets in band b (default: equal
+    index keys), and a pair may meet only once within a band. A join
+    row is kept only in the FIRST band whose hit holds, so each pair
+    comes out once with no distinct shuffle.
+
+    When `probe is index` (a self-join) each unordered pair comes out
+    once, as probe id < index id; otherwise nothing orients the pairs.
+    Returns every probe column suffixed 1 and every index column
+    suffixed 2."""
+    if hit is None:
+        hit = lambda s1, s2, b: key(s1, b) == key(s2, b)  # noqa: E731
+
+    def banded(frame: DataFrame, keys) -> DataFrame:
+        structs = [
+            F.struct(F.lit(b).alias("band"), k.alias("val"))
+            for b in range(n_bands)
+            for k in keys(sig, b)
+        ]
+        return frame.select(
+            *frame.columns, F.explode(F.array(*structs)).alias("bv")
+        ).select(*frame.columns, "bv.band", "bv.val")
+
+    one_key = lambda s, b: [key(s, b)]  # noqa: E731
+    p = banded(probe, probe_keys or one_key).alias("p")
+    i = banded(index, one_key).alias("i")
+    cond = (F.col("p.band") == F.col("i.band")) & (
+        F.col("p.val") == F.col("i.val")
+    )
+    if probe is index:
+        cond = cond & (F.col(f"p.{ids}") < F.col(f"i.{ids}"))
+    first_hit = F.when(hit(f"{sig}1", f"{sig}2", 0), 0)
+    for b in range(1, n_bands):
+        first_hit = first_hit.when(hit(f"{sig}1", f"{sig}2", b), b)
+    return (
+        p.join(i, cond)
+        .select(
+            *[F.col(f"p.{c}").alias(f"{c}1") for c in probe.columns],
+            *[F.col(f"i.{c}").alias(f"{c}2") for c in index.columns],
+            F.col("p.band").alias("band"),
+        )
+        .filter(F.col("band") == first_hit.otherwise(-1))
+        .drop("band")
+    )
+
+
+def _lsh_pairs(
+    index: DataFrame, probe: DataFrame, n_bands: int, bits_per_band: int
+) -> DataFrame:
+    """Hyperplane-LSH candidates over `_lsh_sigs` frames: a band's bits
+    are its key, and the probe side also visits every bucket within
+    Hamming LSH_PROBE_BITS of it (1 + bits_per_band keys per band), so a
+    pair meets in band b exactly when the band's bits differ in at most
+    LSH_PROBE_BITS places. The index keeps one key per band: at scale
+    the index is the cost that matters."""
+
+    def band(s: str, b: int) -> str:
+        return f"(({s}) >> {b * bits_per_band}) & {(1 << bits_per_band) - 1}"
+
+    flips = [""] + [f" ^ {1 << j}" for j in range(bits_per_band)]
+    return _banded_pairs(
+        index,
+        probe,
+        "vec_id",
+        "sig",
+        n_bands,
+        key=lambda s, b: F.expr(band(s, b)),
+        probe_keys=lambda s, b: [F.expr(band(s, b) + f) for f in flips],
+        hit=lambda s1, s2, b: F.expr(
+            f"bit_count({band(f'{s1} ^ {s2}', b)}) <= {LSH_PROBE_BITS}"
+        ),
+    )
 
 
 @register(
@@ -414,33 +500,17 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     rises like multiple hash tables, at the cost of a few extra (tiny)
     query-side rows instead of a replicated corpus index — at 100 TB the
     index is the cost that matters."""
-    emb = _embeddings(spark, sf_dir)
-    bits_per_band = LSH_PLANES // LSH_BANDS
-    probe_flips = [None] + (
-        list(range(bits_per_band)) if LSH_PROBE_BITS >= 1 else []
-    )
-    sig = emb.withColumn(
-        "sig", _lsh_signature(F.col("v"), _hyperplanes(LSH_PLANES, 64))
-    )
-    corpus_keys = _band_keys(LSH_BANDS, bits_per_band, [None])
-    bands = sig.select(
-        "vec_id", "v", F.explode(F.array(*corpus_keys)).alias("bk")
-    ).select("vec_id", "v", "bk.band", "bk.bkey")
-    probe_keys = _band_keys(LSH_BANDS, bits_per_band, probe_flips)
-    queries = (
-        sig.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.explode(F.array(*probe_keys)).alias("bk"),
-        )
-        .select("query_id", "qv", "bk.band", "bk.bkey")
-    )
+    sig = _lsh_sigs(_embeddings(spark, sf_dir), LSH_PLANES)
+    queries = F.broadcast(sig.filter(F.col("vec_id") < N_QUERIES))
     cand = (
-        bands.join(queries, ["band", "bkey"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "qv", F.col("vec_id").alias("neighbor_id"), "v")
-        .distinct()
+        _lsh_pairs(sig, queries, LSH_BANDS, LSH_PLANES // LSH_BANDS)
+        .filter(F.col("vec_id1") != F.col("vec_id2"))
+        .select(
+            F.col("vec_id1").alias("query_id"),
+            F.col("v1").alias("qv"),
+            F.col("vec_id2").alias("neighbor_id"),
+            F.col("v2").alias("v"),
+        )
     )
     return _exact_topk(cand)
 

@@ -104,6 +104,7 @@ def test_fuzzy_decon_catches_all_exact_crossing_pairs(spark, sf_correctness):
     }
     got_rows = text_decontaminate_fuzzy(spark, sf_correctness).collect()
     got = {tuple(sorted((r.corpus_doc, r.eval_doc))) for r in got_rows}
+    assert len(got_rows) == len(got), "a pair came out twice"
     assert want <= got, want - got
     assert got <= want, got - want  # nothing under the pair threshold
     for r in got_rows:

@@ -21,10 +21,10 @@ def test_simhash_pairs_are_true_near_dups(spark, sf_correctness):
     jrows = dedup_ngram_jaccard(spark, sf_correctness).collect()
     jac = {(r.d1, r.d2) for r in jrows}
     hi = {(r.d1, r.d2) for r in jrows if r.jaccard >= 0.9}
-    sim = {
-        (r.d1, r.d2) for r in simhash_pairs(spark, sf_correctness).collect()
-    }
+    rows = simhash_pairs(spark, sf_correctness).collect()
+    sim = {(r.d1, r.d2) for r in rows}
     assert sim, "simhash found nothing"
+    assert len(rows) == len(sim), "a pair came out twice"
     assert sim <= jac, f"false positives: {sorted(sim - jac)[:5]}"
     assert hi and len(sim & hi) * 2 >= len(hi), (
         f"simhash recall vs high-sim tier too low: {len(sim & hi)}/{len(hi)}"
@@ -132,19 +132,16 @@ def test_mllib_minhash_lsh_agrees(spark, sf_correctness):
 def test_simhash_banding_theorem_and_packed_sig_consistency(
     spark, sf_correctness
 ):
-    """The (test-only, sf <= 0.01) banding-theorem check must prove the
-    banded pair set equals brute-force all-pairs Hamming <= 3, and the
-    packed-bigint signature path it uses must produce the same pair set as
-    the array-bits production path (simhash_pairs)."""
+    """The banding theorem against the production path: the banded
+    `simhash_pairs` output must equal, as (d1, d2, hamming) rows, the
+    brute-force all-pairs Hamming <= SIMHASH_HAMMING_MAX (7) set over
+    the same packed signatures (complete: nothing missing; sound:
+    nothing extra), each pair exactly once."""
     from hbase_hadoop_flightsearch_spark.operators.dedup import (
         SIMHASH_HAMMING_MAX,
         _simhash_sig_long,
-        simhash_banding_theorem_check,
     )
     from pyspark.sql import functions as F
-
-    row = simhash_banding_theorem_check(spark, sf_correctness).collect()[0]
-    assert row.banding_complete and row.banding_sound
 
     sigs = _simhash_sig_long(spark, sf_correctness)
     bf = (
@@ -156,12 +153,13 @@ def test_simhash_banding_theorem_and_packed_sig_consistency(
         .withColumn("hamming", F.bit_count(F.col("s1").bitwiseXOR(F.col("s2"))))
         .filter(F.col("hamming") <= SIMHASH_HAMMING_MAX)
     )
-    packed = {(r.d1, r.d2, r.hamming) for r in bf.collect()}
-    arr = {
-        (r.d1, r.d2, r.hamming)
-        for r in simhash_pairs(spark, sf_correctness).collect()
-    }
-    assert packed == arr and packed
+    brute = {(r.d1, r.d2, r.hamming) for r in bf.collect()}
+    rows = simhash_pairs(spark, sf_correctness).collect()
+    banded = {(r.d1, r.d2, r.hamming) for r in rows}
+    assert brute, "no pair within the Hamming bound"
+    assert brute - banded == set(), "banding missed pairs"
+    assert banded - brute == set(), "banding emitted non-pairs"
+    assert len(rows) == len(banded)
 
 
 def test_levenshtein_blocking_bounds_hot_buckets(spark):
@@ -408,11 +406,10 @@ def test_phash_banding_is_lossless_vs_bruteforce(spark, sf_smoke):
         if bin((hashes[a] ^ hashes[b]) & ((1 << 64) - 1)).count("1")
         <= PHASH_HAM_T
     }
-    got = {
-        (r["d1"], r["d2"])
-        for r in dedup_image_phash(spark, sf_smoke).collect()
-    }
+    rows = dedup_image_phash(spark, sf_smoke).collect()
+    got = {(r["d1"], r["d2"]) for r in rows}
     assert got == brute
+    assert len(rows) == len(got), "a pair came out twice"
     zero = [(a, b) for (a, b) in brute if hashes[a] == hashes[b]]
     assert zero, "hash-identical image pairs must exist"
 
@@ -442,6 +439,7 @@ def test_embedding_ann_pairs_precision_exact_and_recall(spark, sf_smoke):
         ).fetchall()
     )
     pairs = {(r.d1, r.d2) for r in got}
+    assert len(got) == len(pairs), "a pair came out twice"
     assert pairs <= exact  # precision 1.0: every pair is a true pair
     assert len(pairs & exact) / len(exact) >= 0.95  # measured 1.0
     assert all(r.cosine >= EMB_DEDUP_THRESH for r in got)
@@ -491,6 +489,30 @@ def test_embedding_ann_audit_sample_is_count_bounded(spark, sf_smoke):
     assert exact_sample, "audit sample produced no ground-truth pairs"
     recall = len(got & exact_sample) / len(exact_sample)
     assert recall >= EMB_DEDUP_RECALL_FLOOR, f"sampled recall {recall:.2f}"
+
+
+def test_embedding_ann_rejects_invalid_signature_shapes(spark, tmp_path):
+    """Each invalid planes_n/bands_n shape raises a ValueError naming the
+    parameter before any job runs (the corpus path does not even exist):
+    more bands than planes would key every vector alike (an all-pairs
+    cosine), a remainder would drop planes, and 64 planes do not pack
+    into the bigint signature."""
+    import pytest
+
+    from hbase_hadoop_flightsearch_spark.operators.dedup import (
+        embedding_ann_pairs,
+    )
+
+    missing = str(tmp_path / "no_corpus")
+    for planes_n, bands_n, name in [
+        (4, 6, "bands_n"),
+        (12, 5, "planes_n"),
+        (64, 4, "planes_n"),
+    ]:
+        with pytest.raises(ValueError, match=f"^{name}="):
+            embedding_ann_pairs(
+                spark, missing, planes_n=planes_n, bands_n=bands_n
+            )
 
 
 def test_semdedup_matches_sequential_reference(spark, sf_smoke):

@@ -511,3 +511,57 @@ def test_lloyd_empty_cell_keeps_its_centroid():
     cents = _lloyd(mat, 3, 4)
     assert cents.tolist() == [[2.0, 2.0], [2.0, 2.0], [8.5, 8.0]]
     assert mat.tolist()[0] == [2.0, 2.0]  # the input is not modified
+
+
+def test_banded_pairs_emit_each_pair_once(spark):
+    """_banded_pairs keeps a join row only in the first band whose hit
+    holds: a pair colliding in three bands comes out once, a Hamming-1
+    multi-probe hit comes out once, and a bipartite call (the probe
+    frame is not the index frame) applies no id orientation."""
+    from pyspark.sql import functions as F
+
+    from hbase_hadoop_flightsearch_spark.operators.similarity import (
+        _banded_pairs,
+        _lsh_pairs,
+    )
+
+    def key(s, b):  # band b = elements 2b, 2b + 1
+        return F.xxhash64(F.lit(b), F.slice(s, 2 * b + 1, 2))
+
+    schema = "id bigint, sig array<int>"
+    # 1 and 2 agree in bands 0, 1 and 3; 3 agrees with nobody
+    docs = spark.createDataFrame(
+        [
+            (1, [1, 2, 3, 4, 5, 6, 7, 8]),
+            (2, [1, 2, 3, 4, 0, 0, 7, 8]),
+            (3, [9, 9, 9, 9, 9, 9, 9, 9]),
+        ],
+        schema,
+    )
+
+    def pairs(df):
+        return sorted((r.id1, r.id2) for r in df.collect())
+
+    assert pairs(_banded_pairs(docs, docs, "id", "sig", 4, key)) == [(1, 2)]
+
+    # 2 bands of 3 bits: 10 and 11 differ by one bit in band 0 and agree
+    # in band 1; 11 and 12 differ by one bit in band 0 only; 10 and 12
+    # differ by two bits in each band
+    vecs = spark.createDataFrame(
+        [(10, [0.0], 0b000000), (11, [0.0], 0b000001), (12, [0.0], 0b011011)],
+        "vec_id bigint, v array<double>, sig bigint",
+    )
+    got = sorted(
+        (r.vec_id1, r.vec_id2) for r in _lsh_pairs(vecs, vecs, 2, 3).collect()
+    )
+    assert got == [(10, 11), (11, 12)]
+
+    probe = spark.createDataFrame(
+        [(5, [1, 2, 3, 4, 0, 0, 0, 0]), (1, [1, 2, 3, 4, 5, 6, 7, 8])], schema
+    )
+    assert pairs(_banded_pairs(docs, probe, "id", "sig", 4, key)) == [
+        (1, 1),
+        (1, 2),
+        (5, 1),
+        (5, 2),
+    ]

@@ -55,19 +55,21 @@ import sys
 PER_NAME_TIMEOUT = int(os.environ.get("SWEEP_NAME_TIMEOUT", "900"))
 CHUNK_TIMEOUT = int(os.environ.get("SWEEP_CHUNK_TIMEOUT", "1800"))
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# argv: names, sf_dir, repo root. The child runs on the engine's own
+# session (get_spark), so the sweep executes what tests and bench run;
+# SPARK_GRAFT_DRIVER_MEM sizes the driver for heavy corpora. Its Python
+# workers find the package through PYTHONPATH, from any cwd.
 CHILD = r"""
-import sys, time
-SF_DIR = sys.argv[2]
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession
+import os, sys, time
+SF_DIR, REPO = sys.argv[2], sys.argv[3]
+sys.path.insert(0, REPO)
+os.environ["PYTHONPATH"] = REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 from hbase_hadoop_flightsearch_spark.plans.registry import load_all
+from hbase_hadoop_flightsearch_spark.session import get_spark
 names = sys.argv[1].split(",")
-spark = (SparkSession.builder.master("local[16]")
-         .config("spark.sql.shuffle.partitions", "16")
-         .config("spark.ui.enabled", "false")
-         .config("spark.ui.showConsoleProgress", "false")
-         .config("spark.driver.memory", "12g")
-         .config("spark.sql.session.timeZone", "UTC").getOrCreate())
+spark = get_spark(app_name="exec_sweep")
 assert spark.conf.get("spark.sql.ansi.enabled") == "true", "ANSI off?"
 reg = load_all()
 dense_corpus = not SF_DIR.startswith("/root/testdata/")
@@ -123,12 +125,11 @@ def hub_sample(names: list[str], seed: int, k: int = HUB_SAMPLE_K) -> list[str]:
 def _round_seed() -> int:
     import glob
 
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return len(glob.glob(os.path.join(here, "CORRECTNESS_r*.json")))
+    return len(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
 
 
 def main() -> None:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from hbase_hadoop_flightsearch_spark.plans.registry import load_all
 
     if len(sys.argv) > 1 and sys.argv[1] == "hub-sample":
@@ -150,7 +151,7 @@ def main() -> None:
         out, rc = "", None
         try:
             p = subprocess.run(
-                [sys.executable, "-c", CHILD, ",".join(chunk), sf_dir],
+                [sys.executable, "-c", CHILD, ",".join(chunk), sf_dir, REPO],
                 capture_output=True, text=True, timeout=timeout,
             )
             out, rc = p.stdout, p.returncode

@@ -78,20 +78,22 @@ PER_NAME_TIMEOUT = int(os.environ.get("SWEEP_NAME_TIMEOUT", "900"))
 CHUNK_TIMEOUT = int(os.environ.get("SWEEP_CHUNK_TIMEOUT", "1800"))
 SINGLETON_WORKERS = 2
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# argv: names, sf_dir, repo root. The child runs on the engine's own
+# session (get_spark: core count, codegen cache, broadcast threshold,
+# Arrow), so the sweep checks and times what tests and bench run. Its
+# Python workers find the package through PYTHONPATH, from any cwd.
 CHILD = r"""
-import sys, time
-SF_DIR = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-sys.path.insert(0, "/root/repo"); sys.path.insert(0, "/root/repo/tests")
-from pyspark.sql import SparkSession
+import os, sys, time
+SF_DIR, REPO = sys.argv[2], sys.argv[3]
+sys.path.insert(0, REPO); sys.path.insert(0, os.path.join(REPO, "tests"))
+os.environ["PYTHONPATH"] = REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 from hbase_hadoop_flightsearch_spark.plans.registry import load_all
+from hbase_hadoop_flightsearch_spark.session import get_spark
 from oracle_utils import compare_query_to_oracle
 names = sys.argv[1].split(",")
-spark = (SparkSession.builder.master("local[16]")
-         .config("spark.sql.shuffle.partitions", "16")
-         .config("spark.ui.enabled", "false")
-         .config("spark.ui.showConsoleProgress", "false")
-         .config("spark.driver.memory", "8g")
-         .config("spark.sql.session.timeZone", "UTC").getOrCreate())
+spark = get_spark(app_name="sweep_sf01")
 reg = load_all()
 for name in names:
     print(f"START {name}", flush=True)
@@ -114,7 +116,7 @@ def _say(line: str) -> None:
 
 
 def main() -> None:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from hbase_hadoop_flightsearch_spark.plans.registry import load_all
 
     chunk_size = int(sys.argv[1]) if len(sys.argv) > 1 else 20
@@ -167,7 +169,7 @@ def main() -> None:
         out, rc = "", None
         try:
             p = subprocess.run(
-                [sys.executable, "-c", CHILD, ",".join(chunk), sf_dir],
+                [sys.executable, "-c", CHILD, ",".join(chunk), sf_dir, REPO],
                 capture_output=True, text=True, timeout=timeout, env=env,
             )
             out, rc = p.stdout, p.returncode
