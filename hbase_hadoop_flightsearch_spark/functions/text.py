@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.iterate import materialize
 from ..plans.registry import register
 from ..sources.catalog import load_table
 
@@ -1179,7 +1180,7 @@ GROUP BY d.doc_id
 )
 def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("text")
-    words = (
+    words, _ = materialize(  # the corpus scan runs exactly once
         docs.select(F.explode(F.split("text", " ")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
@@ -1190,7 +1191,6 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("regexp_extract_all(word, '.', 0)"), "  "
             ).alias("t"),
         )
-        .localCheckpoint(eager=True)  # corpus scan runs exactly once
     )
     merges = []
     for rank in range(1, BPE_N_MERGES + 1):
@@ -1216,17 +1216,19 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Column-literal replace: the winning pair is DATA and must never
         # be spliced into a SQL string (a token containing ' or \\ would
         # break the expression parse) — F.lit carries any bytes safely.
-        words = words.select(
-            "word",
-            "n",
-            F.trim(
-                F.replace(
-                    F.concat(F.lit(" "), F.col("t"), F.lit(" ")),
-                    F.lit(f" {best['l']}  {best['r']} "),
-                    F.lit(f" {best['l']}{best['r']} "),
-                )
-            ).alias("t"),
-        ).localCheckpoint(eager=True)
+        words, _ = materialize(
+            words.select(
+                "word",
+                "n",
+                F.trim(
+                    F.replace(
+                        F.concat(F.lit(" "), F.col("t"), F.lit(" ")),
+                        F.lit(f" {best['l']}  {best['r']} "),
+                        F.lit(f" {best['l']}{best['r']} "),
+                    )
+                ).alias("t"),
+            )
+        )
     return spark.createDataFrame(
         merges,
         "merge_rank int, pair_left string, pair_right string, "

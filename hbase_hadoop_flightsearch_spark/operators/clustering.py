@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
+from .iterate import materialize
 from .similarity import _embeddings
 
 KMEANS_K = 10  # matches the label cardinality of the synthetic embeddings
@@ -822,7 +823,7 @@ def ml_logistic_regression_gd(
 
     events = load_table(spark, sf_dir, "events")
     pre = F.unix_micros("ts") < LOGIT_SPLIT_US
-    feat = (
+    feat, _ = materialize(  # features computed exactly once
         events.groupBy("user_id")
         .agg(
             F.log(
@@ -837,7 +838,6 @@ def ml_logistic_regression_gd(
                 ).otherwise(0)
             ).alias("y"),
         )
-        .localCheckpoint(eager=True)  # features computed exactly once
     )
     w = [0.0, 0.0, 0.0]
     rows = []

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import register
 from ..sources.catalog import load_table, widen_if_narrow
+from .iterate import materialize
 
 JACCARD_THRESHOLD = 0.5
 MINHASH_BANDS = 16
@@ -220,18 +221,23 @@ def shingles_from(spark: SparkSession, docs: DataFrame) -> DataFrame:
     # Shingling is the CPU-heavy stage; a small single-file corpus arrives
     # as one input partition and would run it single-threaded. Widen only
     # when the scan is narrower than the cluster — at real scale the scan
-    # already yields maxPartitionBytes-sized splits and this is a no-op
-    # (shared helper since r16; ADVICE r15 flagged the inline triplication).
+    # already yields maxPartitionBytes-sized splits and this is a no-op.
+    # The text is split once per row and the shingles zip three shifted
+    # slices of the tokens: a split inside the lambda is quadratic.
     docs = widen_if_narrow(docs)
     toks = F.split(F.col("text"), " ")
+    n = F.size("toks") - 2
+    grams = F.arrays_zip(
+        F.slice("toks", 1, n).alias("a"),
+        F.slice("toks", 2, n).alias("b"),
+        F.slice("toks", 3, n).alias("c"),
+    )
     shingles = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 3),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)),
-        )
+        F.transform(grams, lambda g: F.concat_ws(" ", g["a"], g["b"], g["c"]))
     )
     return (
         docs.filter(F.size(toks) >= 3)
+        .select("doc_id", toks.alias("toks"))
         .select("doc_id", shingles.alias("shingles"))
     )
 
@@ -243,8 +249,9 @@ def explode_shingles(sh: DataFrame, keep: list, alias: str) -> DataFrame:
     plain explode. A plain explode makes Catalyst infer
     ``size(shingles) > 0 AND isnotnull(shingles)`` and push it below the
     width-normalizing repartition in shingles_from, substituting the FULL
-    shingle expression (split + transform + concat_ws + array_distinct)
-    into a pre-Exchange filter — the CPU-heavy shingling then runs twice,
+    shingle expression (split + three slices + arrays_zip + transform +
+    concat_ws + array_distinct) into a pre-Exchange filter — the
+    CPU-heavy shingling then runs twice,
     and the first pass at raw-scan parallelism (one task on a small
     single-file corpus; guide §4.4's duplicated-evaluation hazard with
     JVM expressions). shingles_from guarantees non-empty arrays by
@@ -435,9 +442,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # EACH of the 16 band structs — 16x the minhashing work (measured
     # 16.7 s -> 7.6 s at sf0.1 and 67 s -> 30 s at 5x; same lazy-
     # expression pathology the r10 ANN fix documents).
-    sigs = minhash_signatures(
-        sh, MINHASH_BANDS * MINHASH_ROWS
-    ).localCheckpoint(eager=True)
+    sigs, _ = materialize(minhash_signatures(sh, MINHASH_BANDS * MINHASH_ROWS))
     cand = _banded_pairs(
         sigs,
         sigs,
@@ -524,7 +529,7 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and push the whole signature expression below the scan's exchange:
     # four signature passes, two of them on one task (19-26 s against
     # 8 s for the earlier array-bits plan, sf0.1 on 4 cores; 4-5 s now).
-    sigs = _simhash_sig_long(spark, sf_dir).localCheckpoint(eager=True)
+    sigs, _ = materialize(_simhash_sig_long(spark, sf_dir))
     return _hamming_pairs(sigs, "doc_id", "sig").select(
         F.col("doc_id1").alias("d1"), F.col("doc_id2").alias("d2"), "hamming"
     )
@@ -925,11 +930,11 @@ def dedup_bloom_reference(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    # Materialize the 4 KiB filter row ONCE (eager localCheckpoint —
-    # executor-side, still never driver-collected): both union branches
-    # below reference it, and without the checkpoint each branch would
-    # re-run the whole reference scan + bit_or build.
-    bf_row = bloom_build(docs).localCheckpoint(eager=True)
+    # Materialize the 4 KiB filter row ONCE (executor-side, still never
+    # driver-collected): both union branches below reference it, and
+    # without the checkpoint each branch would re-run the whole reference
+    # scan + bit_or build.
+    bf_row, _ = materialize(bloom_build(docs))
     flagged = bloom_flag(incoming, bf_row)
     definite_new = flagged.filter(~F.col("bloom_hit")).select("doc_id")
     verified_new = (
@@ -1257,7 +1262,7 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     a quadratic shuffle (270M candidate rows at 25k docs, one 7.2k-doc
     band bucket). The scale-safe shape is DISTINCT-HASH COMPRESSION:
 
-      1. one decode scan -> (doc_id, ahash), localCheckpoint;
+      1. one decode scan -> (doc_id, ahash), materialized;
       2. the pigeonhole band join runs over DISTINCT hashes only
          (3.2k uniques vs 25k docs on the 5x corpus: 2.7M cheap
          candidates instead of 270M);
@@ -1286,9 +1291,10 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # downstream join/agg stages whose extra task scheduling measurably
     # outweighs the decode parallelism (A/B: 1.66 s -> 2.70 s seat with
     # the widen). At real scale the scan is already wide.
-    hashes = docs.mapInPandas(
-        _phash_batches, schema="doc_id bigint, ahash bigint"
-    ).localCheckpoint(eager=True)  # decode scan runs once, feeds all stages
+    # the decode scan runs once and feeds all stages
+    hashes, _ = materialize(
+        docs.mapInPandas(_phash_batches, schema="doc_id bigint, ahash bigint")
+    )
     uniq = hashes.groupBy("ahash").agg(F.count(F.lit(1)).alias("mult"))
     pairs_h = _hamming_pairs(uniq.select("ahash"), "ahash", "ahash").select(
         F.col("ahash1").alias("h1"), F.col("ahash2").alias("h2"), "hamming"
@@ -1471,7 +1477,7 @@ def dedup_chaining_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graph import connected_components
 
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("d1", "d2")
-    pairs = pairs.localCheckpoint(eager=True)  # mined once, used twice
+    pairs, _ = materialize(pairs)  # mined once, used twice
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     labels = connected_components(docs, pairs)
     sizes = labels.groupBy("component_id").agg(
@@ -1663,9 +1669,9 @@ def embedding_ann_pairs(
     # inherit it (the same spread on the probe rows was profiled 52 s
     # single-task vs 13 s spread at sf0.1).
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sig = _lsh_sigs(
-        _embeddings(spark, sf_dir).repartition(width, "vec_id"), n_planes
-    ).localCheckpoint(eager=True)
+    sig, _ = materialize(
+        _lsh_sigs(_embeddings(spark, sf_dir).repartition(width, "vec_id"), n_planes)
+    )
     return (
         _lsh_pairs(sig, sig, n_bands, n_planes // n_bands)
         .withColumn("cosine", _cosine(F.col("v1"), F.col("v2")))

@@ -14,20 +14,23 @@ round is a few groupBy-min + join shuffles of O(edges) rows and the
 round count is O(log n), so long chains (spatial DBSCAN density chains,
 co-purchase components) converge as fast as the near-clique clusters of
 near-dup pairs; min-label propagation would need one round per hop of
-diameter. `localCheckpoint()` truncates lineage each round, otherwise
-the iterated plan grows exponentially in Catalyst. The result is
-property-tested against a sequential union-find.
+diameter. Every round is materialized by the package's one iteration
+driver (`iterate.iterate`), otherwise the iterated plan grows
+exponentially in Catalyst. The result is property-tested against a
+sequential union-find.
 
 Scale notes (100 TB): the loop only ever touches pair endpoints
 (isolated vertices re-join as singletons after convergence), and
-near-dup pair graphs are sparse. On a cluster, replace localCheckpoint
-with a reliable checkpoint dir so a lost executor doesn't recompute the
-whole chain.
+near-dup pair graphs are sparse. With a checkpoint dir set on the
+SparkContext, every round checkpoints reliably, so a lost executor does
+not recompute the whole chain.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from functools import reduce
+
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
@@ -37,6 +40,16 @@ from .dedup import (
     cc_minlabel_duck,
     dedup_ngram_jaccard,
     scale_variant,
+)
+from .iterate import (
+    EMPTY,
+    RANK_ITERS,
+    RANK_SCALE,
+    UNCHANGED,
+    iterate,
+    materialize,
+    rank_int,
+    rank_int_duck,
 )
 
 # The oracle re-derives the same >= 0.5 jaccard pairs (the pairs themselves
@@ -98,15 +111,48 @@ def _star_round(edges: DataFrame, large: bool) -> DataFrame:
             F.least("dst", "m").alias("dst"),
         )
     )
-    if not large:
-        # small-star also re-links u itself to m.
-        out = out.unionByName(
-            m.select(
-                F.greatest("mu", "m").alias("src"),
-                F.least("mu", "m").alias("dst"),
-            )
+    if large:
+        # No distinct: the small-star round that always follows reads this
+        # through a min aggregate and a join whose output it makes distinct,
+        # and its rows are bounded by the 2|E| symmetric edges.
+        return out.filter(F.col("src") != F.col("dst"))
+    # small-star also re-links u itself to m.
+    out = out.unionByName(
+        m.select(
+            F.greatest("mu", "m").alias("src"),
+            F.least("mu", "m").alias("dst"),
         )
+    )
     return out.filter(F.col("src") != F.col("dst")).distinct()
+
+
+def _is_star_forest(edges: DataFrame) -> bool:
+    """Convergence of the alternating rounds: the normalized edge set is
+    a star forest, i.e. every src (child) carries exactly ONE edge and no
+    vertex is both a src and a dst. This is EXACTLY the fixpoint class of
+    the rounds: a star forest makes both rounds reproduce the set (attach
+    analysis: m(child)=root, m(root)=root), and any set-equality fixpoint
+    is a star forest (a vertex that is both src and dst gets re-pointed
+    below itself by the large round; a src with two roots gets its roots
+    linked by the small round; both contradict invariance). It fires one
+    round earlier than a consecutive-set-equality check, needs no
+    prev-round state, and reads the actual degree/role structure, not a
+    collidable signature. The violators are counted by an Observation on
+    a noop-sink pass over the role aggregate: one scan of every role and
+    no global exchange, where count() adds a single-partition one."""
+    roles = (
+        edges.select(F.col("src").alias("v"), F.lit(1).alias("s"), F.lit(0).alias("d"))
+        .unionAll(
+            edges.select(F.col("dst").alias("v"), F.lit(0).alias("s"), F.lit(1).alias("d"))
+        )
+        .groupBy("v")
+        .agg(F.sum("s").alias("s"), F.sum("d").alias("d"))
+    )
+    violators = Observation()
+    roles.filter((F.col("s") > 1) | ((F.col("s") > 0) & (F.col("d") > 0))).observe(
+        violators, F.count(F.lit(1)).alias("n")
+    ).write.format("noop").mode("overwrite").save()
+    return violators.get["n"] == 0
 
 
 def connected_components(vertices: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -122,55 +168,21 @@ def connected_components(vertices: DataFrame, pairs: DataFrame) -> DataFrame:
     Pair endpoints outside `vertices` still link the components they
     touch (and can be their min label), but get no row of their own: the
     final left join keeps exactly the rows of `vertices`."""
-    edges = (
+    # No distinct: a duplicate pair only repeats rows of round 1's
+    # large-star output, which the small-star round makes distinct.
+    edges, _ = materialize(
         pairs.select(
             F.greatest("d1", "d2").alias("src"),
             F.least("d1", "d2").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        # No distinct: a duplicate pair only repeats rows of round 1's
-        # large-star output, which is made distinct. Lazy: round 1's
-        # convergence check is the materializing action.
-        .localCheckpoint(eager=False)
+        ).filter(F.col("src") != F.col("dst"))
     )
-    for _ in range(CC_MAX_ROUNDS):
-        edges = _star_round(edges, large=True)
-        # lazy checkpoint: the star-forest convergence probe below
-        # materializes it — one fewer job per round (r15).
-        edges = _star_round(edges, large=False).localCheckpoint(eager=False)
-        # Convergence = the normalized edge set is a star forest: every
-        # src (child) carries exactly ONE edge and no vertex is both a
-        # src and a dst (r16). This is EXACTLY the fixpoint class of the
-        # alternating rounds — star forest => both rounds reproduce the
-        # set (attach analysis: m(child)=root, m(root)=root); and any
-        # set-equality fixpoint is a star forest (a vertex that is both
-        # src and dst gets re-pointed below itself by the large round; a
-        # src with two roots gets its roots linked by the small round —
-        # both contradict invariance). It fires one round earlier than a
-        # consecutive-set-equality check, needs no prev-round state, and
-        # costs ONE aggregate job per round. Soundness does not rest on a
-        # checksum: the probe reads the actual degree/role structure,
-        # not a collidable signature. A plain count, with no limit: the
-        # last round scans every role anyway, and a limit's generated
-        # class names its counter after the codegen stage, so it would
-        # compile anew on every round of every call.
-        roles = (
-            edges.select(F.col("src").alias("v"), F.lit(1).alias("s"), F.lit(0).alias("d"))
-            .unionAll(
-                edges.select(F.col("dst").alias("v"), F.lit(0).alias("s"), F.lit(1).alias("d"))
-            )
-            .groupBy("v")
-            .agg(F.sum("s").alias("s"), F.sum("d").alias("d"))
-        )
-        not_star = roles.filter(
-            (F.col("s") > 1) | ((F.col("s") > 0) & (F.col("d") > 0))
-        ).count()
-        if not_star == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected components did not converge in {CC_MAX_ROUNDS} rounds"
-        )
+    edges = iterate(
+        "connected components",
+        edges,
+        lambda e: _star_round(_star_round(e, large=True), large=False),
+        CC_MAX_ROUNDS,
+        until=_is_star_forest,
+    ).state
     # The probe proved every src carries exactly one edge, and that edge
     # points at its component root: the roots are a plain projection.
     roots = edges.select(
@@ -209,8 +221,9 @@ def dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PAGERANK_DAMPING = 0.85  # pagerank_int applies it as (85 * in) div 100
-PAGERANK_ITERS = 5
+PAGERANK_DAMPING = 0.85  # rank_int applies it as (85 * in) div 100
+PAGERANK_ITERS = RANK_ITERS
+PR_SCALE = RANK_SCALE  # picorank units for the integer fixed-point variant
 # supplier node ids are offset into their own range so the bipartite
 # graph lives in one integer id space
 _SUPP_OFFSET = 10_000_000
@@ -218,144 +231,50 @@ _SUPP_OFFSET = 10_000_000
 
 def _customer_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected (symmetrized) customer-supplier edges: who bought from
-    whom, via orders x lineitem. Distinct pairs — multiplicity is not
-    weight here."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"),
-            (F.col("l_suppkey") + _SUPP_OFFSET).alias("supp"),
-        )
-        .distinct()
+    whom, via orders x lineitem, supplier ids offset by _SUPP_OFFSET.
+    Distinct pairs — multiplicity is not weight here."""
+    pairs = _purchase_pairs(spark, sf_dir).select(
+        "cust", (F.col("supp") + _SUPP_OFFSET).alias("supp")
     )
     return pairs.select(
         F.col("cust").alias("src"), F.col("supp").alias("dst")
     ).unionByName(
-        pairs.select(
-            F.col("supp").alias("src"), F.col("cust").alias("dst")
-        )
+        pairs.select(F.col("supp").alias("src"), F.col("cust").alias("dst"))
     )
-
-
-PR_SCALE = 10**12  # picorank units for the integer fixed-point variant
 
 
 def pagerank_int(edges: DataFrame, iters: int = PAGERANK_ITERS) -> DataFrame:
-    """Integer fixed-point PageRank by power iteration on a directed edge
-    list: per round, each node spreads rank/out_degree along its
-    out-edges; rank' = base + d*in. Ranks are carried in picorank
-    BIGINTs, every division a floor division — contrib = rank div deg,
-    damping = (85*in) div 100, base = (15*SCALE) div (100*N).
+    """Integer fixed-point PageRank on a directed (src, dst) edge list:
+    `rank_int` with every weight 1, so contrib = rank div out_degree.
     Deterministic in any engine, so the DuckDB oracle replays the whole
-    trajectory with unrolled CTEs (the quantized-Lloyd's device). Mass is
-    conserved only up to the floor remainders — a documented property of
-    the fixed-point variant, not a bug; tests pin the ranks to a float
-    NumPy power iteration within that quantization error.
-
-    Scale shape: one Exchange(dst) groupBy per round over O(edges) rows;
-    degrees and the node set are computed once and reused, and lineage
-    is truncated per round (localCheckpoint)."""
-    edges = edges.persist()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
+    trajectory with unrolled CTEs (the quantized-Lloyd's device); tests
+    pin the ranks to a float NumPy power iteration within the floor
+    quantization error."""
+    return rank_int(
+        edges.withColumn("w", F.lit(1).cast("bigint")), "pagerank", iters
     )
-    n_nodes = nodes.count()
-    out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    base = (15 * PR_SCALE) // (100 * n_nodes)
-    ranks = nodes.select(
-        "node", F.lit(PR_SCALE // n_nodes).cast("bigint").alias("rank")
-    )
-    for _ in range(iters):
-        contribs = (
-            edges.join(ranks, edges.src == ranks.node)
-            .join(out_deg, "src")
-            .select("dst", F.expr("rank div deg").alias("c"))
-        )
-        incoming = contribs.groupBy("dst").agg(
-            F.sum("c").cast("bigint").alias("in_sum")
-        )
-        ranks = (
-            nodes.join(incoming, nodes.node == incoming.dst, "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(
-                        "(85 * COALESCE(in_sum, CAST(0 AS BIGINT)))"
-                        " div 100"
-                    )
-                )
-                .cast("bigint")
-                .alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    edges.unpersist()
-    return ranks
 
 
-def _pagerank_oracle() -> str:
-    s = PR_SCALE
-    sql = f"""
-WITH pairs AS MATERIALIZED (
+_PAGERANK_ORACLE = rank_int_duck(
+    f"""pairs AS MATERIALIZED (
   SELECT DISTINCT o_custkey AS cust,
          l_suppkey + {_SUPP_OFFSET} AS supp
   FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 ),
 edges AS MATERIALIZED (
-  SELECT cust AS src, supp AS dst FROM pairs
-  UNION ALL SELECT supp, cust FROM pairs
-),
-nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM edges),
-nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-deg AS MATERIALIZED (
-  SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM edges GROUP BY src
-),
-b AS MATERIALIZED (
-  SELECT CAST((15 * {s}) // (100 * n) AS BIGINT) AS base FROM nn
-),
-r0 AS (
-  SELECT node, CAST({s} // n AS BIGINT) AS rank FROM nodes, nn
-)"""
-    prev = "r0"
-    # MATERIALIZED per round (r13): DuckDB 1.0 re-plans inlined CTE
-    # references, so every round otherwise re-inlines edges/deg/nodes —
-    # each a replay of the pairs join — and the 5x-density replay
-    # timed out the r12 sweep chunk. Same fix class as _hits_oracle.
-    for i in range(1, PAGERANK_ITERS + 1):
-        sql += f""",
-c{i} AS MATERIALIZED (
-  SELECT e.dst, CAST(SUM(r.rank // d.deg) AS BIGINT) AS in_sum
-  FROM edges e JOIN {prev} r ON e.src = r.node
-  JOIN deg d ON e.src = d.src
-  GROUP BY e.dst
-),
-r{i} AS MATERIALIZED (
-  SELECT n.node,
-    CAST(b.base + (85 * COALESCE(c.in_sum, 0)) // 100 AS BIGINT) AS rank
-  FROM nodes n LEFT JOIN c{i} c ON n.node = c.dst, b
-)"""
-        prev = f"r{i}"
-    sql += f"""
-SELECT CAST(node - {_SUPP_OFFSET} AS BIGINT) AS suppkey,
+  SELECT cust AS src, supp AS dst, CAST(1 AS BIGINT) AS w FROM pairs
+  UNION ALL SELECT supp, cust, CAST(1 AS BIGINT) FROM pairs
+)""",
+    f"""SELECT CAST(node - {_SUPP_OFFSET} AS BIGINT) AS suppkey,
        rank AS rank_pico
-FROM {prev} WHERE node >= {_SUPP_OFFSET}
-"""
-    return sql
+FROM ranks WHERE node >= {_SUPP_OFFSET}
+""",
+)
 
 
 @register(
     "graph_pagerank_suppliers",
-    oracle=_pagerank_oracle(),
+    oracle=_PAGERANK_ORACLE,
     doc="PageRank (graph family, beyond CC): power iteration on the "
     "symmetrized customer-supplier purchase graph; per-round cost is "
     "one Exchange(dst) over O(edges). FULL value oracle as of r8: the "
@@ -380,7 +299,7 @@ def graph_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (with min-label components and PageRank). Frontier expansion: each round
 # joins the CURRENT frontier (vertices settled last round) against the edge
 # list and keeps neighbors not yet settled — per-round work is
-# O(frontier-adjacent edges), not O(V); localCheckpoint truncates lineage.
+# O(frontier-adjacent edges), not O(V).
 # Round count = eccentricity of the source, bounded by MAX_DEPTH to match
 # the depth-bounded recursive-CTE oracle on cyclic graphs.
 
@@ -391,35 +310,28 @@ def bfs_distances(
     edges: DataFrame, source: int, max_depth: int = BFS_MAX_DEPTH
 ) -> DataFrame:
     """(v, dist) for every vertex within ``max_depth`` hops of ``source``
-    over undirected edges (cols a, b)."""
-    sym = _symmetric(
-        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        # lazy: round 1's frontier count is the materializing action
-    ).localCheckpoint(eager=False)
-    spark = edges.sparkSession
-    settled = spark.createDataFrame([(source, 0)], "v long, dist int")
-    frontier = settled
-    for depth in range(1, max_depth + 1):
-        nxt = (
+    over undirected edges (cols a, b). The loop state is the frontier
+    (the vertices first reached in the last round); it stops when a round
+    reaches no new vertex."""
+    sym, _ = materialize(
+        _symmetric(edges.select(F.col("a").alias("src"), F.col("b").alias("dst")))
+    )
+    reached = []  # every earlier frontier, materialized, in depth order
+
+    def expand(frontier: DataFrame) -> DataFrame:
+        reached.append(frontier)
+        seen = reduce(DataFrame.unionAll, reached).select("v")
+        return (
             sym.join(frontier.select(F.col("v").alias("src")), "src")
             .select(F.col("dst").alias("v"))
             .distinct()
-            .join(settled.select("v"), "v", "left_anti")
-            .withColumn("dist", F.lit(depth))
-            .localCheckpoint(eager=False)
+            .join(seen, "v", "left_anti")
+            .withColumn("dist", F.lit(len(reached)))
         )
-        # count() both fully materializes the lazy checkpoint AND decides
-        # emptiness — ONE job per round where r15's eager-checkpoint +
-        # isEmpty() take(1) paid two (r16; isEmpty on a lazy block set
-        # would only partially materialize it, count() materializes all).
-        if nxt.count() == 0:
-            break
-        # lazy: next round's frontier-expansion job (or the caller's
-        # action after the loop) materializes the union — one fewer job
-        # per round (r15).
-        settled = settled.unionAll(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-    return settled
+
+    source_row = edges.sparkSession.createDataFrame([(source, 0)], "v long, dist int")
+    last = iterate("bfs", source_row, expand, max_depth, until=EMPTY, strict=False)
+    return reduce(DataFrame.unionAll, reached + [last.state])
 
 
 from .mining import _ITEMS_DUCK  # noqa: E402  (shared basket CTE text)
@@ -583,14 +495,14 @@ FROM m_cnt, internal, sq
     "sum(d_c^2)) / (4m^2) over BIGINTs, divided once and rounded — no "
     "float accumulation. Spark shape: joinless capped-basket pair "
     "mining (one shuffle), star-contraction CC on the strong "
-    "subgraph (O(log n) rounds, edges localCheckpointed), then "
+    "subgraph (O(log n) rounds, edges checkpointed), then "
     "O(V+E) label joins and O(communities) mass aggregation.",
 )
 def graph_modularity_strong(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .mining import copurchase_pairs
 
     li = load_table(spark, sf_dir, "lineitem")
-    all_edges = copurchase_pairs(li).localCheckpoint(eager=True)
+    all_edges, _ = materialize(copurchase_pairs(li))
     strong = all_edges.filter(
         F.col("pair_count") >= MODULARITY_STRONG_MIN
     ).select(F.col("part_a").alias("d1"), F.col("part_b").alias("d2"))
@@ -646,88 +558,67 @@ def graph_modularity_strong(spark: SparkSession, sf_dir: str) -> DataFrame:
 # k-core decomposition: iterative degree peeling
 # ---------------------------------------------------------------------------
 
+def _support_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(a, b) co-purchase part pairs, a < b, bought together at least
+    LINKPRED_MIN_SUPPORT times: the graph of k-core, LPA, two-hop reach
+    and the clustering coefficient."""
+    from .mining import LINKPRED_MIN_SUPPORT, copurchase_pairs
+
+    return (
+        copurchase_pairs(load_table(spark, sf_dir, "lineitem"))
+        .filter(F.col("pair_count") >= LINKPRED_MIN_SUPPORT)
+        .select(F.col("part_a").alias("a"), F.col("part_b").alias("b"))
+    )
+
+
 KCORE_K = 2
 KCORE_MAX_ROUNDS = 100  # safety bound; peel rounds = longest chain of
 # cascading removals, observed <= ~10 on every shipped corpus
-KCORE_EDGES_PER_PARTITION = 1_000_000  # iterate partition sizing target
 
 
 def kcore_peel(
     edges: DataFrame,
     k: int = KCORE_K,
     max_rounds: int = KCORE_MAX_ROUNDS,
-) -> tuple[DataFrame, int, bool]:
+) -> tuple[DataFrame, DataFrame, int, bool]:
     """Peel to the k-core (maximal subgraph with min degree >= k) of an
     undirected (a < b) edge list: drop all vertices with current degree
     < k, delete their edges, repeat to the (unique,
-    removal-order-independent) fixpoint. Driver loop like
-    connected_components: each round is one degree agg + two anti-joins,
-    localCheckpoint truncates the iterated lineage.
+    removal-order-independent) fixpoint. Each round is one degree agg +
+    two anti-joins, and the loop stops when a round keeps every edge (a
+    sub-k vertex always owns >= 1 edge, so "no edge removed" <=> "removal
+    set empty").
 
     Returns (core_vertices, core_edges, peel_rounds, converged):
-    core_edges is the loop's final (materialized) edge set — the
-    subgraph induced by the core, handed back so callers need not
-    re-derive it with semi-joins; peel_rounds counts rounds that removed
-    >= 1 vertex; converged is True ONLY if the loop actually observed
-    the empty removal set within max_rounds (VERDICT r7 #3 — the flag
-    is computed from the real loop exit, never assumed). If the cascade
-    exhausts the bound, the non-fixpoint residue is returned with
-    converged=False."""
-    # LAZY checkpoint materialized by the count (r15, guide §1.2 "per-task
-    # work" applied to the driver loop): the eager-checkpoint-then-count
-    # idiom scheduled TWO jobs per materialization; marking the checkpoint
-    # lazy makes the count the materializing action — one pass over the
-    # edge plan, one job. Same blocks, same lineage truncation.
-    edges0 = edges.localCheckpoint(eager=False)
-    prev_cnt = edges0.count()
-    # Right-size the iterate's partitioning to the DATA (~1M edges per
-    # partition, capped): every peel round schedules O(partitions) tasks
-    # per job, and the support-filtered edge set is typically orders of
-    # magnitude smaller than the fact table it came from — inheriting
-    # the scan's partitioning would pay 32+ near-empty tasks per round
-    # at bench scale while the row-based target still fans out to
-    # thousands of partitions at 100 TB. coalesce (no shuffle) only ever
-    # reduces partition count, reading the already-checkpointed blocks.
-    target = min(max(1, -(-prev_cnt // KCORE_EDGES_PER_PARTITION)), 4096)
-    cur = edges0.coalesce(target)
-    rounds = 0
-    converged = False
-    for _ in range(max_rounds):
-        neigh = cur.select(F.col("a").alias("v")).unionAll(
-            cur.select(F.col("b").alias("v"))
+    core_edges is the loop's final (materialized) edge set, the subgraph
+    induced by the core; peel_rounds counts rounds that removed >= 1
+    vertex; converged is True ONLY if the loop observed the empty removal
+    set within max_rounds. If the cascade exhausts the bound, the
+    non-fixpoint residue is returned with converged=False."""
+
+    def peel(cur: DataFrame) -> DataFrame:
+        deg = (
+            cur.select(F.col("a").alias("v"))
+            .unionAll(cur.select(F.col("b").alias("v")))
+            .groupBy("v")
+            .agg(F.count(F.lit(1)).alias("d"))
         )
-        deg = neigh.groupBy("v").agg(F.count(F.lit(1)).alias("d"))
-        # lazy-checkpoint the removal set: it feeds BOTH anti-joins, and
-        # without the barrier each one rebuilds the full degree aggregate
-        # (two BroadcastExchange subtrees in the round plan — exchange
-        # reuse is not guaranteed across build sides). One degree pass
-        # per round instead of two; local A/B neutral (r15).
-        bad = deg.filter(F.col("d") < k).select("v").localCheckpoint(
-            eager=False
+        bad = deg.filter(F.col("d") < k).select("v")
+        return cur.join(bad, cur["a"] == bad["v"], "left_anti").join(
+            bad, cur["b"] == bad["v"], "left_anti"
         )
-        # One materialization per round: the anti-join both applies the
-        # removal AND reveals convergence via the edge-count delta (a
-        # sub-k vertex always owns >= 1 edge, so "no edges removed" <=>
-        # "removal set empty"), instead of a separate isEmpty() action
-        # that would evaluate the degree aggregate a second time. The
-        # checkpoint is lazy, so the count IS the materializing job.
-        nxt = (
-            cur.join(bad, cur["a"] == bad["v"], "left_anti")
-            .join(bad, cur["b"] == bad["v"], "left_anti")
-            .localCheckpoint(eager=False)
-        )
-        cnt = nxt.count()
-        if cnt == prev_cnt:
-            converged = True
-            break
-        cur, prev_cnt = nxt, cnt
-        rounds += 1
+
+    loop = iterate(
+        "k-core", edges, peel, max_rounds, until=UNCHANGED, strict=False
+    )
+    cur = loop.state
     core = (
         cur.select(F.col("a").alias("v"))
         .unionAll(cur.select(F.col("b").alias("v")))
         .distinct()
     )
-    return core, cur, rounds, converged
+    # the round that observes the fixpoint removes nothing
+    return core, cur, loop.rounds - loop.converged, loop.converged
 
 
 def kcore_vertices(edges: DataFrame, k: int = KCORE_K) -> DataFrame:
@@ -738,7 +629,7 @@ def kcore_vertices(edges: DataFrame, k: int = KCORE_K) -> DataFrame:
 @register(
     "graph_kcore",
     headline=True,  # bench seat for the iterative driver-loop plan class
-    # (bounded rounds + localCheckpoint) — VERDICT r7 #6: the one family
+    # (bounded rounds + a checkpoint per round) — VERDICT r7 #6: the one family
     # with no bench representation, and the likeliest to regress from a
     # lineage/checkpoint change.
     oracle=f"""
@@ -818,7 +709,7 @@ WHERE ok.is_core OR (SELECT mr FROM last) >= {KCORE_MAX_ROUNDS}
     "support-2 co-purchase graph until the unique fixpoint. The peel "
     "is an inherently iterative computation (like connected "
     "components): a driver loop of degree-agg + anti-join rounds with "
-    "localCheckpoint lineage truncation; rounds = cascade depth, "
+    "per-round lineage truncation; rounds = cascade depth, "
     "bounded and observable. FULL VALUE ORACLE (VERDICT r7 #4): exact "
     "core membership with per-vertex in-core degree, replayed in "
     "DuckDB by a recursive-CTE peel; peel_rounds and converged are "
@@ -826,22 +717,10 @@ WHERE ok.is_core OR (SELECT mr FROM last) >= {KCORE_MAX_ROUNDS}
     "from the recursion depth + fixpoint test), never assumed.",
 )
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .mining import LINKPRED_MIN_SUPPORT, copurchase_pairs
-
-    edges = (
-        copurchase_pairs(load_table(spark, sf_dir, "lineitem"))
-        .filter(F.col("pair_count") >= LINKPRED_MIN_SUPPORT)
-        .select("part_a", "part_b")
-        .select(F.col("part_a").alias("a"), F.col("part_b").alias("b"))
-    )
-    # kcore_peel lazily checkpoints its input itself (materialized by its
-    # sizing count), so no pre-checkpoint here — the r14-era eager
-    # checkpoint paid one extra materialization pass of the copurchase
-    # aggregate plus a block copy.
-    _, core_edges, rounds, converged = kcore_peel(edges, KCORE_K)
+    # kcore_peel materializes its input as round 0 of its loop.
+    _, core_edges, rounds, converged = kcore_peel(_support_edges(spark, sf_dir))
     # The degree aggregate's keys ARE the core vertex set (every core
-    # vertex owns >= k >= 1 edges), so the old core-set join was a
-    # redundant distinct + exchange + join — r10 drops it (same rows).
+    # vertex owns >= k >= 1 edges).
     core_deg = (
         core_edges.select(F.col("a").alias("v"))
         .unionAll(core_edges.select(F.col("b").alias("v")))
@@ -1011,54 +890,44 @@ FROM {prev} l
     "SYNCHRONOUS rounds (the async variant is order-dependent), new "
     "label = most frequent neighbor label with ties to the smallest "
     "label. Each round is one join + one count shuffle + one per-vertex "
-    "argmax window, labels localCheckpoint'ed between rounds — the "
+    "argmax window, labels checkpointed between rounds — the "
     "third member of the iterative-graph family next to CC and k-core. "
     "FULL value oracle: the unrolled recursive replay checks exact "
     "per-vertex community assignment and community sizes.",
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .mining import LINKPRED_MIN_SUPPORT, copurchase_pairs
+    edges = _support_edges(spark, sf_dir)
+    sym, _ = materialize(
+        edges.select(F.col("a").alias("v"), F.col("b").alias("u")).unionAll(
+            edges.select(F.col("b").alias("v"), F.col("a").alias("u"))
+        )
+    )
+    w = Window.partitionBy("v").orderBy(F.desc("c"), F.asc("label"))
 
-    edges = (
-        copurchase_pairs(load_table(spark, sf_dir, "lineitem"))
-        .filter(F.col("pair_count") >= LINKPRED_MIN_SUPPORT)
-        .select(F.col("part_a").alias("a"), F.col("part_b").alias("b"))
-    )
-    sym = (
-        edges.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionAll(edges.select(F.col("b").alias("v"), F.col("a").alias("u")))
-        .localCheckpoint()
-    )
-    labels = sym.select("v").distinct().select(
-        "v", F.col("v").alias("label")
-    )
-    for _ in range(LPA_ROUNDS):
+    def relabel(labels: DataFrame) -> DataFrame:
         counts = (
-            sym.join(
-                labels.select(F.col("v").alias("u"), "label"), "u"
-            )
+            sym.join(labels.select(F.col("v").alias("u"), "label"), "u")
             .groupBy("v", "label")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        w = Window.partitionBy("v").orderBy(F.desc("c"), F.asc("label"))
-        labels = (
+        return (
             counts.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("v", "label")
-            # lazy: each round's blocks materialize under the next
-            # round's job (finally the caller's action) — the plan per
-            # round still builds on a truncated LogicalRDD, but the
-            # fixed {LPA_ROUNDS}-round loop schedules one job instead
-            # of one per round (r15). No persist lifecycle rides on
-            # round boundaries here (unlike pagerank_int, which must stay
-            # eager so edges.unpersist() runs after the rounds).
-            .localCheckpoint(eager=False)
         )
-    sizes = labels.groupBy("label").agg(
-        F.count(F.lit(1)).cast("bigint").alias("community_size")
-    )
-    return labels.join(sizes, "label").select(
-        "v", F.col("label").alias("community"), "community_size"
+
+    # Round 1 starts from singleton labels and the edges are distinct, so
+    # every neighbor label counts once and the argmax is the smallest
+    # neighbor: one min aggregate instead of a join, a count and a window.
+    first = sym.groupBy("v").agg(F.min("u").alias("label"))
+    labels = iterate("label propagation", first, relabel, LPA_ROUNDS - 1).state
+    return labels.select(
+        "v",
+        F.col("label").alias("community"),
+        F.count(F.lit(1))
+        .over(Window.partitionBy("label"))
+        .cast("bigint")
+        .alias("community_size"),
     )
 
 
@@ -1107,18 +976,12 @@ FROM deg d LEFT JOIN (
     "on power-law graphs at 100 TB. Exact value oracle.",
 )
 def graph_2hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .mining import LINKPRED_MIN_SUPPORT, copurchase_pairs
-
-    edges = (
-        copurchase_pairs(load_table(spark, sf_dir, "lineitem"))
-        .filter(F.col("pair_count") >= LINKPRED_MIN_SUPPORT)
-        .select(F.col("part_a").alias("a"), F.col("part_b").alias("b"))
+    edges = _support_edges(spark, sf_dir)
+    sym, _ = materialize(
+        edges.select(F.col("a").alias("v"), F.col("b").alias("u")).unionAll(
+            edges.select(F.col("b").alias("v"), F.col("a").alias("u"))
+        )
     )
-    sym = edges.select(
-        F.col("a").alias("v"), F.col("b").alias("u")
-    ).unionAll(
-        edges.select(F.col("b").alias("v"), F.col("a").alias("u"))
-    ).localCheckpoint()
     two = (
         sym.alias("s1")
         .join(
@@ -1200,14 +1063,7 @@ FROM deg d LEFT JOIN tv t ON d.v = t.v
 def graph_clustering_coefficient(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .mining import LINKPRED_MIN_SUPPORT, copurchase_pairs
-
-    edges = (
-        copurchase_pairs(load_table(spark, sf_dir, "lineitem"))
-        .filter(F.col("pair_count") >= LINKPRED_MIN_SUPPORT)
-        .select(F.col("part_a").alias("a"), F.col("part_b").alias("b"))
-        .localCheckpoint()
-    )
+    edges, _ = materialize(_support_edges(spark, sf_dir))
     e1 = edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = edges.select(F.col("a").alias("y"), F.col("b").alias("z"))
     e3 = edges.select(F.col("a").alias("x"), F.col("b").alias("z"))
@@ -1282,48 +1138,30 @@ def hits_int(pairs: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
     Per round: auth_raw(s) = sum of hub over in-edges (one
     Exchange(supp)); normalize a = (raw * SCALE) div max(raw); then the
     mirrored hub update (one Exchange(cust)). max(raw) is a 1-row
-    broadcast, lineage truncated per round — the bounded-round driver
-    pattern shared with pagerank_int / Lloyd's."""
-    pairs = pairs.persist()
+    broadcast. The loop state is the authority vector: round 1's comes
+    from the all-SCALE hubs, and every later round first updates the
+    hubs from it."""
+    pairs, _ = materialize(pairs)
+
+    def half(scores: DataFrame, src: str, dst: str, out: str) -> DataFrame:
+        """Per `dst`: the sum of `scores` (columns `src`, score) over its
+        edges, max-normalized to SCALE."""
+        raw = pairs.join(scores, src).groupBy(dst).agg(
+            F.sum(scores.columns[1]).cast("bigint").alias("raw")
+        )
+        mx = raw.agg(F.max("raw").alias("mx"))
+        return raw.crossJoin(F.broadcast(mx)).select(
+            dst, F.expr(f"(raw * {HITS_SCALE}) div mx").cast("bigint").alias(out)
+        )
+
+    def hits_round(auth: DataFrame) -> DataFrame:
+        return half(half(auth, "supp", "cust", "h"), "cust", "supp", "a")
+
     hubs = pairs.select("cust").distinct().select(
         "cust", F.lit(HITS_SCALE).cast("bigint").alias("h")
     )
-    auth = None
-    for _ in range(iters):
-        araw = (
-            pairs.join(hubs, "cust")
-            .groupBy("supp")
-            .agg(F.sum("h").cast("bigint").alias("raw"))
-        )
-        amax = araw.agg(F.max("raw").alias("mx"))
-        auth = (
-            araw.crossJoin(F.broadcast(amax))
-            .select(
-                "supp",
-                F.expr(f"(raw * {HITS_SCALE}) div mx")
-                .cast("bigint")
-                .alias("a"),
-            )
-            .localCheckpoint()
-        )
-        hraw = (
-            pairs.join(auth, "supp")
-            .groupBy("cust")
-            .agg(F.sum("a").cast("bigint").alias("raw"))
-        )
-        hmax = hraw.agg(F.max("raw").alias("mx"))
-        hubs = (
-            hraw.crossJoin(F.broadcast(hmax))
-            .select(
-                "cust",
-                F.expr(f"(raw * {HITS_SCALE}) div mx")
-                .cast("bigint")
-                .alias("h"),
-            )
-            .localCheckpoint()
-        )
-    pairs.unpersist()
-    return auth
+    auth = half(hubs, "cust", "supp", "a")
+    return iterate("hits", auth, hits_round, iters - 1).state
 
 
 def _hits_oracle() -> str:
@@ -1333,7 +1171,7 @@ def _hits_oracle() -> str:
     # exponential recompute tree over the unrolled rounds that spilled
     # >45 GB at the 5x graph density (r12 sweep infra FAIL). Forcing
     # materialization bounds per-round state at O(nodes + edges),
-    # mirroring the Spark side's per-round localCheckpoint.
+    # mirroring the Spark side's per-round checkpoint.
     s = HITS_SCALE
     sql = f"""
 WITH pairs AS MATERIALIZED (

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import register
 from ..sources.catalog import load_table
+from .iterate import materialize
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -744,9 +745,9 @@ def join_bloom_semi_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_extendedprice"
     )
-    # One 4 KiB filter row, built once (eager checkpoint: the row feeds a
+    # One 4 KiB filter row, built once (materialized: the row feeds a
     # broadcast on the probe side; without it the urgent scan re-runs).
-    bf_row = bloom_build(urgent, "o_orderkey").localCheckpoint(eager=True)
+    bf_row, _ = materialize(bloom_build(urgent, "o_orderkey"))
     pruned = bloom_flag(li, bf_row, "l_orderkey").filter(F.col("bloom_hit"))
     exact = pruned.join(urgent, pruned.l_orderkey == urgent.o_orderkey,
                         "left_semi")
@@ -1099,21 +1100,19 @@ def spatial_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     d2 = (F.col("lat1") - F.col("lat2")) * (
         F.col("lat1") - F.col("lat2")
     ) + (F.col("lon1") - F.col("lon2")) * (F.col("lon1") - F.col("lon2"))
-    pairs = (
+    pairs, _ = materialize(
         probe.join(build, ["cy", "cx"])
         .filter(F.col("i1") != F.col("i2"))
         .filter(d2 <= F.lit(R).cast("long") * F.lit(R))
         .select("i1", "i2")
-        .localCheckpoint()
     )
     nbr = pairs.groupBy(F.col("i1").alias("id")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nbr")
     )
-    core = (
+    core, _ = materialize(
         pts.join(nbr, "id", "left")
         .filter(F.coalesce("n_nbr", F.lit(0)) + 1 >= DBSCAN_MINPTS)
         .select("id")
-        .localCheckpoint()
     )
     ce = (
         pairs.join(core.select(F.col("id").alias("i1")), "i1", "left_semi")

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import register
 from ..sources.catalog import load_table
+from .iterate import RANK_ITERS, rank_int, rank_int_duck
 
 BASKET_CAP = 64  # max distinct parts per order entering pair expansion
 
@@ -611,16 +612,11 @@ def ml_item_cf_recommendations(
 # TextRank keyword extraction (Mihalcea & Tarau 2004)
 # ---------------------------------------------------------------------------
 
-TR_SCALE = 10**12  # picorank units (same device as graph_pagerank_suppliers)
-TR_ITERS = 5
 TR_MIN_FREQ = 5  # vocabulary floor: tokens below this never enter the graph
 TR_TOPK = 25
 
-
-def _textrank_oracle() -> str:
-    s = TR_SCALE
-    sql = f"""
-WITH toks AS (
+_TEXTRANK_ORACLE = rank_int_duck(
+    f"""toks AS (
   SELECT doc_id, string_split(text, ' ') AS l FROM documents
 ),
 adj AS (
@@ -633,7 +629,7 @@ vocab AS (
     SELECT unnest(string_split(text, ' ')) AS token FROM documents
   ) GROUP BY token HAVING COUNT(*) >= {TR_MIN_FREQ}
 ),
-edges AS (
+edges AS MATERIALIZED (
   SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS w FROM (
     SELECT pair[1] AS src, pair[2] AS dst FROM adj WHERE pair[1] <> pair[2]
     UNION ALL
@@ -642,57 +638,33 @@ edges AS (
   JOIN vocab va ON e.src = va.token
   JOIN vocab vb ON e.dst = vb.token
   GROUP BY src, dst
-),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
-nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-strength AS (
-  SELECT src, CAST(SUM(w) AS BIGINT) AS s FROM edges GROUP BY src
-),
-b AS (SELECT CAST((15 * {s}) // (100 * n) AS BIGINT) AS base FROM nn),
-r0 AS (
-  SELECT node, CAST({s} // n AS BIGINT) AS rank FROM nodes, nn
-)"""
-    prev = "r0"
-    for i in range(1, TR_ITERS + 1):
-        sql += f""",
-c{i} AS (
-  SELECT e.dst, CAST(SUM((r.rank * e.w) // st.s) AS BIGINT) AS in_sum
-  FROM edges e JOIN {prev} r ON e.src = r.node
-  JOIN strength st ON e.src = st.src
-  GROUP BY e.dst
-),
-r{i} AS (
-  SELECT n.node,
-    CAST(b.base + (85 * COALESCE(c.in_sum, 0)) // 100 AS BIGINT) AS rank
-  FROM nodes n LEFT JOIN c{i} c ON n.node = c.dst, b
-)"""
-        prev = f"r{i}"
-    sql += f"""
-SELECT node AS token, rank AS rank_pico
-FROM {prev}
+)""",
+    f"""SELECT node AS token, rank AS rank_pico
+FROM ranks
 ORDER BY rank_pico DESC, token
 LIMIT {TR_TOPK}
-"""
-    return sql
+""",
+)
 
 
 @register(
     "text_textrank_keywords",
-    oracle=_textrank_oracle(),
+    oracle=_TEXTRANK_ORACLE,
     doc="TextRank keyword extraction (Mihalcea & Tarau 2004): weighted "
     "PageRank over the corpus word co-occurrence graph — adjacent-token "
     "pairs, symmetrized, weighted by co-occurrence count, vocabulary "
     f"floored at corpus frequency {TR_MIN_FREQ} so the graph is "
     "O(vocab), not O(corpus). Ranks are integer picorank fixed-point "
     "(same device as graph_pagerank_suppliers: floor-division contrib "
-    f"weighted by edge-weight/strength, 85/15 damping, {TR_ITERS} "
+    f"weighted by edge-weight/strength, 85/15 damping, {RANK_ITERS} "
     "rounds), so the DuckDB unrolled-CTE replay is value-exact for the "
     f"top-{TR_TOPK} keyword list. Spark plan: pair explode is one "
     "scan-side generate, the graph build two shuffles (edge count + "
     "strength), and each round one Exchange(dst) over O(vocab-edges) — "
     "at 100 TB the co-occurrence graph after the frequency floor is "
     "millions of nodes, far smaller than the corpus, and rounds are "
-    "edge-local with localCheckpoint lineage truncation.",
+    "edge-local with a checkpoint per round. The power iteration is "
+    "graph_pagerank_suppliers' own (rank_int), with weights.",
 )
 def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -724,42 +696,10 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(vocab.withColumnRenamed("token", "dst"), "dst")
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-        .persist()
     )
-    nodes = edges.select(F.col("src").alias("node")).distinct().localCheckpoint()
-    n_nodes = nodes.count()
-    strength = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("s"))
-    base = (15 * TR_SCALE) // (100 * n_nodes)
-    ranks = nodes.select(
-        "node", F.lit(TR_SCALE // n_nodes).cast("bigint").alias("rank")
-    )
-    for _ in range(TR_ITERS):
-        contribs = (
-            edges.join(ranks, edges.src == ranks.node)
-            .join(strength, "src")
-            .select("dst", F.expr("(rank * w) div s").alias("c"))
-        )
-        incoming = contribs.groupBy("dst").agg(
-            F.sum("c").cast("bigint").alias("in_sum")
-        )
-        ranks = (
-            nodes.join(incoming, nodes.node == incoming.dst, "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(
-                        "(85 * COALESCE(in_sum, CAST(0 AS BIGINT))) div 100"
-                    )
-                )
-                .cast("bigint")
-                .alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    edges.unpersist()
     return (
-        ranks.select(F.col("node").alias("token"), F.col("rank").alias("rank_pico"))
+        rank_int(edges, "textrank")
+        .select(F.col("node").alias("token"), F.col("rank").alias("rank_pico"))
         .orderBy(F.desc("rank_pico"), F.asc("token"))
         .limit(TR_TOPK)
     )

@@ -24,11 +24,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
 from ..sources.catalog import load_table
+from .iterate import iterate, materialize
 
 
 def _md5_of(col: str):
@@ -1017,22 +1018,34 @@ SELECT center_idx, center_vec_id, radius_q FROM ({picks}), r
     "brute force in tests/test_properties.py.",
 )
 def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = _kcenter_quantized(spark, sf_dir).localCheckpoint()
-    first = pts.orderBy("vec_id").first()
-    centers = [(0, int(first["vec_id"]))]
-    cur = pts.withColumn("md", _kc_dist_to(first["v"]))
-    for idx in range(1, KCENTER_K):
-        far = cur.orderBy(F.desc("md"), "vec_id").first()
-        centers.append((idx, int(far["vec_id"])))
-        cur = cur.withColumn(
-            "md", F.least("md", _kc_dist_to(far["v"]))
-            # lazy: the next round's argmax first() (a global TakeOrdered,
-            # which computes every partition) or the final radius agg is
-            # the materializing action — halves the loop's job count (r15)
-        ).localCheckpoint(eager=False)
-    radius = int(cur.agg(F.max("md")).collect()[0][0])
+    # Each pick is read off an Observation on the action that materializes
+    # the frame it is picked from: the seed is the min vec_id, and every
+    # later pick the max of (md, -vec_id), i.e. the farthest point with
+    # ties to the smaller vec_id. The last round's max md is the radius.
+    picked = [Observation()]
+    pts, _ = materialize(
+        _kcenter_quantized(spark, sf_dir)
+        .withColumn("md", F.lit(2**63 - 1))  # no center yet: +inf
+        .observe(picked[0], F.min(F.struct("vec_id", "v")).alias("p"))
+    )
+
+    def cover(cur: DataFrame) -> DataFrame:
+        center = picked[-1].get["p"]
+        picked.append(Observation())
+        return cur.withColumn(
+            "md", F.least("md", _kc_dist_to(center["v"]))
+        ).observe(
+            picked[-1],
+            F.max(
+                F.struct("md", (-F.col("vec_id")).alias("nid"), "vec_id", "v")
+            ).alias("p"),
+        )
+
+    iterate("k-center", pts, cover, KCENTER_K)
+    picks = [o.get["p"] for o in picked]
+    radius = int(picks[-1]["md"])
     return spark.createDataFrame(
-        [(i, vid, radius) for i, vid in centers],
+        [(i, int(p["vec_id"]), radius) for i, p in enumerate(picks[:-1])],
         "center_idx int, center_vec_id long, radius_q long",
     )
 

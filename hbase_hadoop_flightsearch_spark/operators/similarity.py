@@ -688,11 +688,12 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = _nearest_cells(
         _query_set(emb), cents, "query_id", "qv", IVF_NPROBE
     )
+    # No distinct: a vector has one home cell and a query's probe cells
+    # are distinct, so no (query, vector) pair can meet twice.
     cand = (
         assigned.join(probes, "cent_id")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "qv", F.col("vec_id").alias("neighbor_id"), "v")
-        .distinct()
     )
     return _exact_topk(cand)
 

@@ -28,14 +28,15 @@ from ..operators.dedup import (
     cc_minlabel_duck,
     scale_variant,
 )
+from ..operators.iterate import materialize
 from ..sources.catalog import load_table, widen_if_narrow
 from .registry import register
 
 MIN_TOKENS, MAX_TOKENS = 20, 200
-# Post-checkpoint consumer sizing for the neardup pipeline (kcore_peel's
-# KCORE_EDGES_PER_PARTITION idiom): ~100k kept docs (~100 MB of ~1 KB
-# texts) per partition, derived from the materializing count so a toy
-# corpus coalesces to 1 block while 100 TB fans out to thousands (capped).
+# Post-checkpoint consumer sizing for the neardup pipeline: ~100k kept
+# docs (~100 MB of ~1 KB texts) per partition, derived from the
+# checkpoint's row count so a toy corpus coalesces to 1 block while
+# 100 TB fans out to thousands (capped).
 DOCS_PER_PARTITION = 100_000
 
 
@@ -173,7 +174,7 @@ GROUP BY k.lang_pred
     "clustering step runs star-contraction connected components; the "
     "oracle closes the same graph with bounded min-label propagation. "
     "The builder is not lazy: it runs Spark jobs before it returns — the "
-    "count that materializes the kept-docs checkpoint, then per CC round "
+    "kept-docs checkpoint, the pair-graph checkpoint, then per CC round "
     "one star-contraction round and one star-forest probe.",
 )
 def pipeline_corpus_prep_neardup(
@@ -210,19 +211,20 @@ def pipeline_corpus_prep_neardup(
     # lang-ID + BPE scoring stays post-widen, so it still runs at cluster
     # width on a narrow toy scan (widen_if_narrow is a no-op at scale).
     pre = widen_if_narrow(docs.filter(n_tokens.between(MIN_TOKENS, MAX_TOKENS)))
-    kept = pre.select(
-        "doc_id",
-        "text",
-        ngram_lang_pred(text).alias("lang_pred"),
-        F.regexp_count(text, F.lit(BPE_ISH_PATTERN))
-        .cast("int")
-        .alias("bpe_tokens"),
-        # LAZY checkpoint (reused by pairs-filter, vertices, and rollup):
-        # the sizing count() below is the materializing action — one job,
-        # not checkpoint-then-count's two (r15 kcore_peel idiom).
-    ).localCheckpoint(eager=False)
-    # Right-size the downstream consumers to the DATA (kcore_peel's
-    # coalesce idiom): the checkpoint materializes at cluster width so
+    # Reused by pairs-filter, vertices, and rollup; the checkpoint's
+    # action also counts the rows for the sizing below.
+    kept, n_kept = materialize(
+        pre.select(
+            "doc_id",
+            "text",
+            ngram_lang_pred(text).alias("lang_pred"),
+            F.regexp_count(text, F.lit(BPE_ISH_PATTERN))
+            .cast("int")
+            .alias("bpe_tokens"),
+        )
+    )
+    # Right-size the downstream consumers to the DATA (a coalesce, no
+    # shuffle): the checkpoint materializes at cluster width so
     # the scoring stage is parallel, but the CC-vertex and rollup reads
     # of a toy corpus would then schedule cluster-width near-empty tasks
     # per job across the ~15-job driver loop (the r15 driver regression:
@@ -230,8 +232,7 @@ def pipeline_corpus_prep_neardup(
     # merges already-checkpointed blocks, never recomputes; the shingle
     # stage keeps the WIDE view (shingles_from re-widens CPU-heavy work
     # itself). At 100 TB the row-derived target fans back out to
-    # thousands of partitions, capped like KCORE_EDGES_PER_PARTITION.
-    n_kept = kept.count()
+    # thousands of partitions (capped).
     target = min(max(1, -(-n_kept // DOCS_PER_PARTITION)), 4096)
     narrow = kept.coalesce(target)
     ids = narrow.select("doc_id")
@@ -685,9 +686,10 @@ def pipeline_media_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT widened (r15 A/B: 1.26 s widened vs 1.27 s narrow at sf0.1 —
     # a tie; the decode here is header-audit-light, so the exchange buys
     # nothing locally and the scan is already wide at real scale).
-    curated = docs.mapInPandas(
-        curate, schema="doc_id bigint, status string, ahash bigint"
-    ).localCheckpoint(eager=True)  # one decode pass feeds both branches
+    # one decode pass feeds both branches
+    curated, _ = materialize(
+        docs.mapInPandas(curate, schema="doc_id bigint, status string, ahash bigint")
+    )
     ok = curated.filter(F.col("status") == "ok")
     clusters = ok.groupBy("ahash").agg(
         F.count(F.lit(1)).alias("n_members")
