@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import ngram_set
 from ..plans.registry import register
 from ..sources.catalog import load_table
 
@@ -34,14 +35,10 @@ EVAL_MOD = 50  # doc_id % 50 == 0 -> eval set
 def _doc_ngrams(docs: DataFrame, n: int) -> DataFrame:
     """(doc_id, gs: array<string>) — distinct word n-grams per document."""
     toks = F.split(F.col("text"), " ")
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        )
-    )
-    return docs.filter(F.size(toks) >= n).select(
-        "doc_id", grams.alias("gs")
+    return (
+        docs.filter(F.size(toks) >= n)
+        .select("doc_id", toks.alias("toks"))
+        .select("doc_id", ngram_set("toks", n).alias("gs"))
     )
 
 

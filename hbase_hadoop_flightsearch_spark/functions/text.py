@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.dedup import word_ngrams
 from ..operators.iterate import materialize
 from ..plans.registry import register
 from ..sources.catalog import load_table
@@ -850,25 +851,20 @@ GROUP BY doc_id
     "-log2 P(w2|w1) = log2(c(w1)+V) - log2(c(w1w2)+1), averaged per "
     "document. Like the unigram and entropy precedents, log2 is only "
     "ever applied to exact integer counts, so both engines compute "
-    "identical doubles. Scale shape: bigrams via one lead() window "
-    "(Exchange(doc_id)), then two token-keyed partial-agg shuffles; "
+    "identical doubles. Scale shape: bigrams explode scan-side from "
+    "the split tokens (no window, no doc_id exchange), then two "
+    "token-keyed partial-agg shuffles; "
     "the bigram LM table joins back broadcast (vocab^2-bounded but "
     "Zipf-sparse — swap for a shuffle join at web scale, plan "
     "otherwise unchanged).",
 )
 def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "token")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    big = tok.select(
-        "doc_id",
-        F.col("token").alias("w1"),
-        F.lead("token").over(w).alias("w2"),
-    ).filter(F.col("w2").isNotNull())
+    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
+    tok = toks.select(F.explode("t").alias("token"))
+    big = toks.select(
+        "doc_id", F.explode(word_ngrams("t", 2)).alias("g")
+    ).select("doc_id", "g.w1", "g.w2")
     doc_big = big.groupBy("doc_id", "w1", "w2").agg(
         F.count(F.lit(1)).alias("tf")
     )
@@ -1194,18 +1190,10 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     merges = []
     for rank in range(1, BPE_N_MERGES + 1):
-        toks = F.split("t", "  ")
         pairs = (
-            words.select(
-                "n",
-                F.explode(
-                    F.arrays_zip(
-                        F.slice(toks, 1, F.size(toks) - 1).alias("l"),
-                        F.slice(toks, 2, F.size(toks) - 1).alias("r"),
-                    )
-                ).alias("p"),
-            )
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+            words.select("n", F.split("t", "  ").alias("toks"))
+            .select("n", F.explode(word_ngrams("toks", 2)).alias("p"))
+            .groupBy(F.col("p.w1").alias("l"), F.col("p.w2").alias("r"))
             .agg(F.sum("n").alias("c"))
             .orderBy(F.col("c").desc(), "l", "r")
             .limit(1)
@@ -1830,17 +1818,10 @@ LIMIT {PMI_TOPK}
 def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(F.split(F.col("text"), " ").alias("t"))
-    big = toks.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(t) - 1), "
-                "i -> struct(t[i - 1] AS w1, t[i] AS w2))"
-            )
-        ).alias("p")
-    ).select("p.w1", "p.w2")
-    uni = docs.select(
-        F.explode(F.split(F.col("text"), " ")).alias("w")
+    big = toks.select(F.explode(word_ngrams("t", 2)).alias("p")).select(
+        "p.w1", "p.w2"
     )
+    uni = toks.select(F.explode("t").alias("w"))
     bc = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     uc = uni.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     tot = big.agg(F.count(F.lit(1)).alias("tb")).crossJoin(
@@ -1878,6 +1859,19 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 ROUGE_PAIR_MOD = 2  # candidate = even doc, reference = doc_id + 1
+
+
+def _gram_counts(pairs: DataFrame, text: str, n: int, alias: str) -> DataFrame:
+    """(cand_id, tok, <alias>): how often each word n-gram of the `text`
+    column occurs for each candidate, the n-gram joined by single spaces
+    — the count table of the ROUGE and BLEU overlaps."""
+    grams = pairs.select("cand_id", F.split(text, " ").alias("t")).select(
+        "cand_id", F.explode(word_ngrams("t", n)).alias("g")
+    )
+    tok = F.concat_ws(" ", *[F.col(f"g.w{i}") for i in range(1, n + 1)])
+    return grams.groupBy("cand_id", tok.alias("tok")).agg(
+        F.count(F.lit(1)).alias(alias)
+    )
 
 
 @register(
@@ -1960,29 +1954,10 @@ def ml_eval_rouge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text").alias("rtext"),
     )
     pairs = cand.join(ref, "cand_id")
-
-    def grams(col: str, n: int):
-        if n == 1:
-            return F.explode(F.split(F.col(col), " "))
-        return F.explode(
-            F.expr(
-                f"transform(sequence(1, size(split({col}, ' ')) - 1), "
-                f"i -> concat_ws(' ', slice(split({col}, ' '), i, 2)))"
-            )
-        )
-
     out = pairs.select("cand_id", "ref_id")
     for n, tag in ((1, "1"), (2, "2")):
-        u = (
-            pairs.select("cand_id", grams("ctext", n).alias("tok"))
-            .groupBy("cand_id", "tok")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        r = (
-            pairs.select("cand_id", grams("rtext", n).alias("tok"))
-            .groupBy("cand_id", "tok")
-            .agg(F.count(F.lit(1)).alias("c2"))
-        )
+        u = _gram_counts(pairs, "ctext", n, "c")
+        r = _gram_counts(pairs, "rtext", n, "c2")
         ov = (
             u.join(r, ["cand_id", "tok"])
             .groupBy("cand_id")
@@ -2582,16 +2557,11 @@ FROM ranked WHERE rnk <= {LLR_TOP}
 )
 def text_collocations_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    big = docs.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(split(text, ' ')) - 1),"
-                " i -> struct(split(text, ' ')[i - 1] AS w1,"
-                "             split(text, ' ')[i] AS w2))"
-            )
-        ).alias("bg")
-    ).select("bg.w1", "bg.w2")
+    big = (
+        docs.select(F.split(F.col("text"), " ").alias("t"))
+        .select(F.explode(word_ngrams("t", 2)).alias("bg"))
+        .select("bg.w1", "bg.w2")
+    )
     cb2 = big.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("bigint").alias("k11")
     )
@@ -2851,28 +2821,8 @@ def ml_eval_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text").alias("rtext"),
     )
     pairs = c.join(r, "cand_id")
-
-    def grams(col, n):
-        toks = F.split(F.col(col), " ")
-        if n == 1:
-            return F.explode(toks)
-        return F.explode(
-            F.expr(
-                f"transform(sequence(1, size(split({col}, ' ')) - 1),"
-                f" i -> concat(split({col}, ' ')[i - 1], ' ',"
-                f" split({col}, ' ')[i]))"
-            )
-        )
-
-    def counts(src, col, n, alias):
-        return (
-            src.select("cand_id", grams(col, n).alias("tok"))
-            .groupBy("cand_id", "tok")
-            .agg(F.count(F.lit(1)).cast("bigint").alias(alias))
-        )
-
-    u1 = counts(pairs, "ctext", 1, "c")
-    r1 = counts(pairs, "rtext", 1, "rc")
+    u1 = _gram_counts(pairs, "ctext", 1, "c")
+    r1 = _gram_counts(pairs, "rtext", 1, "rc")
     o1 = (
         u1.join(r1, ["cand_id", "tok"])
         .groupBy("cand_id")
@@ -2880,8 +2830,8 @@ def ml_eval_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t1 = u1.groupBy("cand_id").agg(F.sum("c").cast("bigint").alias("ct"))
     s1 = r1.groupBy("cand_id").agg(F.sum("rc").cast("bigint").alias("rt"))
-    u2 = counts(pairs, "ctext", 2, "c")
-    r2 = counts(pairs, "rtext", 2, "rc")
+    u2 = _gram_counts(pairs, "ctext", 2, "c")
+    r2 = _gram_counts(pairs, "rtext", 2, "rc")
     o2 = (
         u2.join(r2, ["cand_id", "tok"])
         .groupBy("cand_id")

@@ -222,23 +222,36 @@ def shingles_from(spark: SparkSession, docs: DataFrame) -> DataFrame:
     # as one input partition and would run it single-threaded. Widen only
     # when the scan is narrower than the cluster — at real scale the scan
     # already yields maxPartitionBytes-sized splits and this is a no-op.
-    # The text is split once per row and the shingles zip three shifted
-    # slices of the tokens: a split inside the lambda is quadratic.
     docs = widen_if_narrow(docs)
     toks = F.split(F.col("text"), " ")
-    n = F.size("toks") - 2
-    grams = F.arrays_zip(
-        F.slice("toks", 1, n).alias("a"),
-        F.slice("toks", 2, n).alias("b"),
-        F.slice("toks", 3, n).alias("c"),
-    )
-    shingles = F.array_distinct(
-        F.transform(grams, lambda g: F.concat_ws(" ", g["a"], g["b"], g["c"]))
-    )
     return (
         docs.filter(F.size(toks) >= 3)
         .select("doc_id", toks.alias("toks"))
-        .select("doc_id", shingles.alias("shingles"))
+        .select("doc_id", ngram_set("toks", 3).alias("shingles"))
+    )
+
+
+def word_ngrams(toks: str, n: int) -> Column:
+    """array<struct<w1..wn>>: the word n-grams of the already-split token
+    column `toks`, in order — `n` shifted slices zipped together, so no
+    element re-splits the text (a split inside a lambda is quadratic) and
+    a caller that explodes the result reads the struct fields without a
+    lambda. Empty, never an error, below `n` tokens. The tokens are a
+    column of their own, so the slices share one split per row."""
+    k = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    return F.arrays_zip(
+        *[F.slice(toks, i, k).alias(f"w{i}") for i in range(1, n + 1)]
+    )
+
+
+def ngram_set(toks: str, n: int) -> Column:
+    """array<string>: the distinct word n-grams of a token column, each
+    joined by single spaces, in first-occurrence order."""
+    return F.array_distinct(
+        F.transform(
+            word_ngrams(toks, n),
+            lambda g: F.concat_ws(" ", *[g[f"w{i}"] for i in range(1, n + 1)]),
+        )
     )
 
 
@@ -396,16 +409,17 @@ def shingle_pair_intersections(
     )
 
 
-def minhash_signatures(sh: DataFrame, n_hashes: int) -> DataFrame:
-    """(doc_id, sig: array<bigint>) — sig[j] = min over shingles of
-    xxhash64(shingle, j). Pure expression: vectorized, no UDF."""
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda j: F.array_min(
-            F.transform(F.col("shingles"), lambda s: F.xxhash64(s, j))
-        ),
-    )
-    return sh.select("doc_id", sig.alias("sig"))
+def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, sig: array<bigint>): sig[j] = min over the doc's shingles
+    of xxhash64(shingle, j), for the 16 bands x 4 rows of the LSH tier.
+    The shingles are exploded once and hashed in one grouped aggregate,
+    so every hash runs in whole-stage codegen."""
+    ex = explode_shingles(doc_shingles(spark, sf_dir), ["doc_id"], "s")
+    mins = [
+        F.min(F.xxhash64("s", F.lit(j)))
+        for j in range(MINHASH_BANDS * MINHASH_ROWS)
+    ]
+    return ex.groupBy("doc_id").agg(F.array(*mins).alias("sig"))
 
 
 MINHASH_NEARDUP_THRESHOLD = 0.9  # the tier where 16x4 banding recall is
@@ -435,14 +449,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense regardless of corpus size, unlike the raw shingle index."""
     from .similarity import _banded_pairs
 
-    sh = doc_shingles(spark, sf_dir)
-    # Materialize the signatures ONCE: sig is 64 x array_min-over-
-    # shingles xxhash64 expressions, and without the checkpoint Catalyst
-    # collapses the projection and inlines that whole expression into
-    # EACH of the 16 band structs — 16x the minhashing work (measured
-    # 16.7 s -> 7.6 s at sf0.1 and 67 s -> 30 s at 5x; same lazy-
-    # expression pathology the r10 ANN fix documents).
-    sigs, _ = materialize(minhash_signatures(sh, MINHASH_BANDS * MINHASH_ROWS))
+    # Materialized once: both sides of the band join read the signatures.
+    sigs, _ = materialize(_minhash_sigs(spark, sf_dir))
     cand = _banded_pairs(
         sigs,
         sigs,
@@ -453,44 +461,44 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(b), F.slice(s, b * MINHASH_ROWS + 1, MINHASH_ROWS)
         ),
     ).select(F.col("doc_id1").alias("d1"), F.col("doc_id2").alias("d2"))
-    return _exact_jaccard(cand, sh, MINHASH_NEARDUP_THRESHOLD)
-
-
-def _simhash_counts_col() -> Column:
-    """Per-bit feature-vote counts over ``shingles``: count[i] = sum over
-    shingles of +1/-1 by bit i of the shingle's md5 digest (nibble
-    ``i div 4``, bit ``i % 4``). md5 — not xxhash64 — so DuckDB extracts
-    the IDENTICAL bits and the signature (hence the whole pair set)
-    is value-oracle-able; cross-engine nibble parity is pinned in
-    tests/test_dedup.py."""
-    return F.expr(f"""
-      aggregate(
-        transform(shingles, s -> md5(cast(s AS BINARY))),
-        array_repeat(CAST(0 AS BIGINT), {SIMHASH_BITS}),
-        (acc, m) -> zip_with(
-          acc,
-          transform(sequence(0, {SIMHASH_BITS - 1}), i ->
-            CAST(IF(shiftright(CAST(conv(substring(
-                      m, CAST(i div 4 AS INT) + 1, 1), 16, 10) AS INT),
-                    CAST(i % 4 AS INT)) % 2 = 1, 1, -1) AS BIGINT)),
-          (x, y) -> x + y))
-    """)
+    return _exact_jaccard(
+        cand, doc_shingles(spark, sf_dir), MINHASH_NEARDUP_THRESHOLD
+    )
 
 
 def _simhash_sig_long(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sig bigint) — the 64 signature bits packed into one long
-    (bit i = sign of the feature vote for bit i), so pair Hamming distance
-    is a single `bit_count(xor)` instead of a 64-element array fold."""
-    sh = doc_shingles(spark, sf_dir)
-    with_counts = sh.select("doc_id", _simhash_counts_col().alias("counts"))
-    # Python F.shiftleft needs a literal shift; the SQL form takes a column.
-    sig = F.expr(
-        f"""aggregate(
-          zip_with(counts, sequence(0, {SIMHASH_BITS - 1}),
-                   (c, i) -> struct(c AS c, i AS i)),
-          0L, (acc, x) -> acc + IF(x.c > 0, shiftleft(1L, x.i), 0L))"""
+    """(doc_id, sig bigint) — the 64 signature bits packed into one long,
+    so pair Hamming distance is a single `bit_count(xor)`. Each shingle
+    votes +1/-1 on bit i by bit i of its md5 digest (nibble ``i div 4``,
+    bit ``i % 4``), and bit i is set when the vote is positive: when more
+    than half of the doc's n shingles have that bit, 2 * ones > n. md5 —
+    not xxhash64 — so DuckDB extracts the IDENTICAL bits and the whole
+    pair set is value-oracle-able; cross-engine nibble parity is pinned
+    in tests/test_dedup.py. One md5 per shingle row, then one grouped
+    sum per bit."""
+    ex = explode_shingles(doc_shingles(spark, sf_dir), ["doc_id"], "s")
+    md5 = ex.select("doc_id", F.md5(F.col("s").cast("binary")).alias("m"))
+    nibble = [
+        F.conv(F.substring("m", k + 1, 1), 16, 10).cast("int").alias(f"x{k}")
+        for k in range(SIMHASH_BITS // 4)
+    ]
+    bit = [
+        F.shiftright(f"x{i // 4}", i % 4).bitwiseAND(1)
+        for i in range(SIMHASH_BITS)
+    ]
+    ones = (
+        md5.select("doc_id", *nibble)
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            *[F.sum(b).alias(f"b{i}") for i, b in enumerate(bit)],
+        )
     )
-    return with_counts.select("doc_id", sig.alias("sig"))
+    sig = " | ".join(
+        f"IF(2 * b{i} > n, shiftleft(1L, {i}), 0L)"
+        for i in range(SIMHASH_BITS)
+    )
+    return ones.select("doc_id", F.expr(sig).alias("sig"))
 
 
 def _hamming_pairs(frame: DataFrame, ids: str, sig: str) -> DataFrame:
@@ -2007,6 +2015,13 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 MINHASH_MD5_K = 16  # signature length; est error ~ 1/sqrt(K)
 
 
+def salted_md5(sh: str, i: int) -> Column:
+    """Hash i of the engine-portable MinHash family: md5 hex of
+    "<i>|<shingle>", byte-identical to DuckDB's
+    md5(CAST(i AS VARCHAR) || '|' || sh)."""
+    return F.md5(F.concat(F.lit(str(i)), F.lit("|"), F.col(sh)).cast("binary"))
+
+
 def _minhash_md5_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, m0..m15): per-doc minimum of md5(i || '|' || shingle)
     for 16 salted hash functions — md5 hex is byte-identical across
@@ -2014,17 +2029,9 @@ def _minhash_md5_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SIGNATURE ITSELF replays in the oracle. One explode + one
     grouped 16-way min aggregate."""
     ex = explode_shingles(doc_shingles(spark, sf_dir), ["doc_id"], "sh")
+    mins = [F.min(salted_md5("sh", i)) for i in range(MINHASH_MD5_K)]
     return ex.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.md5(
-                    F.concat(
-                        F.lit(str(i)), F.lit("|"), F.col("sh")
-                    ).cast("binary")
-                )
-            ).alias(f"m{i}")
-            for i in range(MINHASH_MD5_K)
-        ]
+        *[m.alias(f"m{i}") for i, m in enumerate(mins)]
     )
 
 

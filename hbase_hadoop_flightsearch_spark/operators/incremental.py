@@ -430,24 +430,17 @@ FROM merged m, direct d
 def incremental_minhash_merge(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.dedup import doc_shingles, explode_shingles
+    from ..operators.dedup import doc_shingles, explode_shingles, salted_md5
 
     ex = explode_shingles(doc_shingles(spark, sf_dir), ["doc_id"], "sh")
-    hashes = [
-        F.md5(
-            F.concat(F.lit(str(i)), F.lit("|"), F.col("sh")).cast("binary")
-        )
-        for i in range(8)
-    ]
+    mins = [F.min(salted_md5("sh", i)) for i in range(8)]
     slice_sigs = ex.groupBy((F.col("doc_id") % MINHASH_SLICES).alias(
         "slice"
-    )).agg(*[F.min(h).alias(f"m{i}") for i, h in enumerate(hashes)])
+    )).agg(*[m.alias(f"m{i}") for i, m in enumerate(mins)])
     merged = slice_sigs.agg(
         *[F.min(f"m{i}").alias(f"m{i}") for i in range(8)]
     )
-    direct = ex.agg(
-        *[F.min(h).alias(f"d{i}") for i, h in enumerate(hashes)]
-    )
+    direct = ex.agg(*[m.alias(f"d{i}") for i, m in enumerate(mins)])
     eq = None
     for i in range(8):
         cond = F.col(f"m{i}") == F.col(f"d{i}")

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import register
 from ..sources.catalog import load_table
+from .dedup import word_ngrams
 from .iterate import RANK_ITERS, rank_int, rank_int_duck
 
 BASKET_CAP = 64  # max distinct parts per order entering pair expansion
@@ -669,19 +670,11 @@ LIMIT {TR_TOPK}
 def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(F.split("text", " ").alias("l"))
-    adj = toks.select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("l") - 1),
-                lambda i: F.struct(
-                    F.element_at("l", i).alias("a"),
-                    F.element_at("l", i + 1).alias("b"),
-                ),
-            )
-        ).alias("p")
-    ).select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+    adj = toks.select(F.explode(word_ngrams("l", 2)).alias("p")).select(
+        F.col("p.w1").alias("a"), F.col("p.w2").alias("b")
+    )
     vocab = (
-        docs.select(F.explode(F.split("text", " ")).alias("token"))
+        toks.select(F.explode("l").alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
         .filter(F.col("freq") >= TR_MIN_FREQ)

@@ -32,7 +32,9 @@ loop (`_lloyd`) over strict sequential folds (`_seq_sum`), so each DuckDB
 oracle replays them bit for bit.
 
 All Spark-side vector math is array expressions over array<double>
-(zip_with / aggregate) — JVM codegen, no Python. Embeddings are cast
+(zip_with / aggregate) — JVM-side but interpreted, not codegen: the
+higher-order functions are CodegenFallback, so each lambda runs
+row by row outside whole-stage codegen. No Python. Embeddings are cast
 float->double BEFORE arithmetic so Spark and DuckDB accumulate identically.
 """
 

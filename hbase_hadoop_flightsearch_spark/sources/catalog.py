@@ -106,8 +106,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         path = table_path(sf_dir, name)
-        _, normalize = events_ts_codec(spark, path)
-        return normalize(spark.read.parquet(path))
+        # Read with the sniffed schema: inferring it again is a job.
+        raw_schema, normalize = events_ts_codec(spark, path)
+        return normalize(spark.read.schema(raw_schema).parquet(path))
     return spark.read.parquet(table_path(sf_dir, name))
 
 

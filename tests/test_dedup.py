@@ -766,3 +766,57 @@ def test_cc_minlabel_gate_fails_loudly_when_unconverged():
         "SELECT COUNT(*) FROM comp"
     )
     assert con.execute(sql).fetchone()[0] == 0
+
+
+def test_simhash_signatures_match_a_hashlib_reference(spark, sf_correctness):
+    """Every packed SimHash signature equals one computed in Python from
+    hashlib.md5 over the same shingles: bit i (nibble i div 4, bit
+    i % 4 of the hex digest) is set when more than half of the shingles
+    have it."""
+    import hashlib
+
+    from hbase_hadoop_flightsearch_spark.operators.dedup import (
+        _simhash_sig_long,
+        doc_shingles,
+    )
+
+    def reference(shingles):
+        votes = [0] * 64
+        for s in shingles:
+            h = hashlib.md5(s.encode()).hexdigest()
+            for i in range(64):
+                votes[i] += 1 if (int(h[i // 4], 16) >> (i % 4)) & 1 else -1
+        sig = sum(1 << i for i in range(64) if votes[i] > 0)
+        return sig - (1 << 64) if sig >= 1 << 63 else sig
+
+    want = {
+        r.doc_id: reference(r.shingles)
+        for r in doc_shingles(spark, sf_correctness).collect()
+    }
+    got = {r.doc_id: r.sig for r in _simhash_sig_long(spark, sf_correctness).collect()}
+    assert got == want
+
+
+def test_minhash_signatures_match_the_lambda_reference(spark, sf_correctness):
+    """The grouped-aggregate signatures equal the nested-lambda form
+    they replace: sig[j] = array_min(transform(shingles, s ->
+    xxhash64(s, j))) for j < 64, bit for bit."""
+    from pyspark.sql import functions as F
+
+    from hbase_hadoop_flightsearch_spark.operators.dedup import (
+        MINHASH_BANDS,
+        MINHASH_ROWS,
+        _minhash_sigs,
+        doc_shingles,
+    )
+
+    lam = F.transform(
+        F.sequence(F.lit(0), F.lit(MINHASH_BANDS * MINHASH_ROWS - 1)),
+        lambda j: F.array_min(
+            F.transform(F.col("shingles"), lambda s: F.xxhash64(s, j))
+        ),
+    )
+    sh = doc_shingles(spark, sf_correctness)
+    want = {r.doc_id: r.sig for r in sh.select("doc_id", lam.alias("sig")).collect()}
+    got = {r.doc_id: r.sig for r in _minhash_sigs(spark, sf_correctness).collect()}
+    assert got == want

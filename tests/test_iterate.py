@@ -20,6 +20,8 @@ from hbase_hadoop_flightsearch_spark.operators.iterate import (
     materialize,
 )
 
+from .plan_utils import lambda_bodies
+
 _LABEL = "spark.job.description"
 
 
@@ -196,28 +198,26 @@ def _checkpoint_calls(tree):
         )
 
 
+def _ngram_reference(toks, n):
+    return [tuple(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
+def _ngram_set_reference(toks, n):
+    return list(dict.fromkeys(" ".join(g) for g in _ngram_reference(toks, n)))
+
+
 def _shingle_reference(text):
-    toks = text.split(" ")
-    return list(dict.fromkeys(" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)))
-
-
-def _lambda_bodies(plan):
-    """The text of every lambdafunction(...) in a plan string."""
-    start = 0
-    while (i := plan.find("lambdafunction(", start)) >= 0:
-        depth, j = 0, i + len("lambdafunction")
-        for j in range(j, len(plan)):
-            depth += {"(": 1, ")": -1}.get(plan[j], 0)
-            if depth == 0:
-                break
-        yield plan[i : j + 1]
-        start = i + 1
+    return _ngram_set_reference(text.split(" "), 3)
 
 
 def test_shingles_split_once_and_match_a_reference(spark):
     import random
 
-    from hbase_hadoop_flightsearch_spark.operators.dedup import shingles_from
+    from hbase_hadoop_flightsearch_spark.operators.dedup import (
+        ngram_set,
+        shingles_from,
+        word_ngrams,
+    )
 
     rng = random.Random(5)
     long_doc = " ".join(rng.choice("abcdefghij") for _ in range(1000))
@@ -234,5 +234,20 @@ def test_shingles_split_once_and_match_a_reference(spark):
     want = {d: _shingle_reference(t) for d, t in texts.items() if len(t.split(" ")) >= 3}
     assert got == want
     assert got[4] == ["x y z", "y z x", "z x y"]
-    bodies = list(_lambda_bodies(sh._jdf.queryExecution().optimizedPlan().toString()))
+    bodies = list(lambda_bodies(sh._jdf.queryExecution().optimizedPlan().toString()))
     assert bodies and not any("split(" in b for b in bodies)
+
+    # the n-gram primitive itself, on token arrays of 0, 1, n-1, n and
+    # 1000 tokens: in-order n-grams, never an error below n tokens
+    long_toks = long_doc.split(" ")
+    for n in (2, 3, 5):
+        arrays = [[], ["a"], long_toks[: n - 1], long_toks[:n], long_toks]
+        toks = spark.createDataFrame(list(enumerate(arrays)), "i int, t array<string>")
+        grams = toks.select(
+            "i", word_ngrams("t", n).alias("g"), ngram_set("t", n).alias("s")
+        )
+        fields = grams.schema["g"].dataType.elementType.fieldNames()
+        assert fields == [f"w{i}" for i in range(1, n + 1)]
+        for r in grams.collect():
+            assert [tuple(g) for g in r.g] == _ngram_reference(arrays[r.i], n)
+            assert r.s == _ngram_set_reference(arrays[r.i], n)

@@ -15,11 +15,6 @@ EVIDENCE rather than hypothesis:
   A singleton that greens is recorded ``OK <name> (alone, Ns)``; one
   that exceeds the per-name budget is recorded
   ``TIMEOUT_ALONE <name> (>Ns solo)`` — a terminal, per-name verdict;
-- a second skip tier, ORACLE_HEAVY_5X, holds the oracle replays with
-  MEASURED solo evidence of being impractical at the 5x corpus (their
-  Spark sides are banded/bounded and value-proven at sf0.001/0.01 +
-  altseeds — see each entry's citation). It is applied only when the
-  corpus is larger than the official sf0.1 (tier arg / auto-detect);
 - the final line reports ``uncategorized=N``: names with no terminal
   record (OK / FAIL / TIMEOUT_ALONE / LOST). A finished sweep must
   report 0.
@@ -29,10 +24,10 @@ oracle_utils.py honors them) so one runaway replay dies alone with a
 loud error instead of exhausting the box — the r12 5x sweep lost a
 whole chunk to a single >45 GB DuckDB temp spill.
 
-Usage: python tools/sweep_sf01.py [chunk_size] [sf_dir] [tier] > sweep.log
-       sf_dir defaults to /root/testdata/sf0.1; tier defaults to
-       "official" for /root/testdata/* corpora and "5x" otherwise
-       (e.g. a tools/gen_altseed.py scale corpus).
+Every registered name runs; no name is skipped at any scale.
+
+Usage: python tools/sweep_sf01.py [chunk_size] [sf_dir] > sweep.log
+       sf_dir defaults to the sf0.1 testdata corpus.
 """
 
 from __future__ import annotations
@@ -42,37 +37,6 @@ import re
 import subprocess
 import sys
 import threading
-
-# EMPTY since r14: the sf0.1 differential covers the FULL registry.
-# The last three holdouts (dedup_cc_clusters, dedup_chaining_audit,
-# pipeline_corpus_prep_neardup — r13: TIMEOUT_ALONE >900 s solo on the
-# quadratic recursive transitive-closure CC replay) were restated as
-# bounded min-label propagation (operators/dedup.py cc_minlabel_duck,
-# VERDICT r13 #3) and re-probed solo at sf0.1 in r14: OK 559.8 s /
-# 554.2 s / 586.3 s. The FOURTEEN names held through r12 were likewise
-# retired green in r13 (SCALE.md tables).
-SKIP: set[str] = set()
-
-# Oracle replays with MEASURED solo evidence of being impractical one
-# scale above official (the 5x corpus: tools/gen_altseed.py OUT 4242 5.0
-# — 75k orders, 50k events, 2.5k docs). Applied ONLY for tier="5x".
-# A name enters this set only with a measured solo TIMEOUT_ALONE record,
-# never by hypothesis — and leaves it the same way:
-#
-# EMPTY since r15. The last three entries (each TIMEOUT_ALONE >900 s in
-# the r13 5x sweep) were re-probed solo on a fresh seed-4242 5x corpus
-# with the scale oracle tier live and ALL passed value-exact:
-#   dedup_minhash_md5_estimate   11.2 s  (its jp stage now replays as
-#                                         the posting-list scale oracle)
-#   events_multitouch_attribution 9.2 s  (the r13 timeout's culprit was
-#                                         the pre-r14 quadratic SPARK
-#                                         side, fixed r14 but the tier
-#                                         entry was never re-probed)
-#   dedup_embedding_ann          42.2 s  (solo on a quiet box; the r13
-#                                         record rode a contended
-#                                         parallel-chunk sweep)
-# The full 5x differential therefore runs with zero exclusion tiers.
-ORACLE_HEAVY_5X: dict[str, str] = {}
 
 PER_NAME_TIMEOUT = int(os.environ.get("SWEEP_NAME_TIMEOUT", "900"))
 CHUNK_TIMEOUT = int(os.environ.get("SWEEP_CHUNK_TIMEOUT", "1800"))
@@ -121,11 +85,6 @@ def main() -> None:
 
     chunk_size = int(sys.argv[1]) if len(sys.argv) > 1 else 20
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    tier = (
-        sys.argv[3]
-        if len(sys.argv) > 3
-        else ("official" if sf_dir.startswith("/root/testdata/") else "5x")
-    )
 
     env = dict(os.environ)
     env.setdefault("SWEEP_DUCK_MEM", "24GB")
@@ -141,21 +100,11 @@ def main() -> None:
     if not sf_dir.rstrip("/").endswith(("sf0.001", "sf0.01")):
         env.setdefault("SWEEP_ORACLE_TIER", "scale")
 
-    all_names = sorted(load_all())
-    names = []
-    for n in all_names:
-        if n in SKIP:
-            continue
-        if tier == "5x" and n in ORACLE_HEAVY_5X:
-            _say(f"TIER5X {n} ({ORACLE_HEAVY_5X[n]})")
-            continue
-        names.append(n)
+    names = sorted(load_all())
     only = os.environ.get("SWEEP_ONLY")  # targeted re-runs / smoke tests
     if only:
-        # an explicit target list overrides BOTH skip tiers — it exists
-        # precisely to re-probe skipped names under the watchdog
         keep = set(only.split(","))
-        names = [n for n in all_names if n in keep]
+        names = [n for n in names if n in keep]
 
     counts = {"ok": 0, "fail": 0, "timeout_alone": 0, "lost": 0}
     terminal: set[str] = set()  # names with an OK/FAIL/terminal record
@@ -237,8 +186,7 @@ def main() -> None:
             counts["timeout_alone" if timed_out else "lost"] += 1
         _say(
             f"TIMEOUT_ALONE {name} (>{PER_NAME_TIMEOUT}s solo; "
-            f"was {why}) — candidate for ORACLE_HEAVY_5X with this "
-            "line as evidence"
+            f"was {why})"
             if timed_out
             else f"LOST {name} (singleton child died twice; was {why})"
         )
@@ -256,8 +204,6 @@ def main() -> None:
     _say(
         f"SWEEP DONE: ok={counts['ok']} fail={counts['fail']} "
         f"timeout_alone={counts['timeout_alone']} lost={counts['lost']} "
-        f"skipped={len(SKIP)} "
-        f"tier5x={len(ORACLE_HEAVY_5X) if tier == '5x' else 0} "
         f"uncategorized={len(uncategorized)}"
     )
 
